@@ -29,10 +29,6 @@ MIN_ALPHA_WORD_FRAC = 0.8      # words with ≥ 1 alphabetic char
 MAX_DUP_LINE_FRAC = 0.3        # duplicate lines / lines
 
 
-def _words(text: Column) -> Column:
-    return F.filter(Tx.tokenize(text), lambda t: t != "")
-
-
 def flags(text: Column,
           min_words: int = MIN_WORDS,
           max_words: int = MAX_WORDS,
@@ -92,6 +88,16 @@ def all_pass(text: Column, **thresholds) -> Column:
         col = F.coalesce(col, F.lit(False))
         acc = col if acc is None else (acc & col)
     return acc
+
+
+def first_failing_rule(text: Column, **thresholds) -> Column:
+    """Name of the first rule (in ``flags`` order) a document fails;
+    ``"null_text"`` when no rule reports a failure (NULL text makes
+    every flag NULL). The drop reason the curation audits give a
+    Gopher-gate drop."""
+    return F.coalesce(*[F.when(~passes, F.lit(name)) for name, passes
+                        in flags(text, **thresholds).items()],
+                      F.lit("null_text"))
 
 
 def gopher_flags(df: DataFrame, text_col: str = "text",

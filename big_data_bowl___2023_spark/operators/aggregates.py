@@ -23,19 +23,6 @@ def grouped_agg(df: DataFrame, keys: Sequence[str],
     return df.groupBy(*keys).agg(*exprs)
 
 
-def grouped_median(df: DataFrame, keys: Sequence[str], col: str,
-                   alias: str = "median") -> DataFrame:
-    """A5: exact grouped median (MBE:161-167; MO:18-34; EPA:15).
-
-    ``F.median`` is exact (full group materialization) — fine here
-    because groups are per-player/per-team and stay small even at
-    100 TB (SURVEY §7.7). For huge groups switch to
-    ``F.percentile_approx`` with a tight accuracy and document the
-    tolerance.
-    """
-    return df.groupBy(*keys).agg(F.median(col).alias(alias))
-
-
 def distinct_rows(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """A9: DISTINCT / ``unique()`` (MBE:18, 24, 115, 140; MC:37)."""
     return df.select(*cols).distinct() if cols else df.distinct()

@@ -1,6 +1,4 @@
-"""Set operations (SURVEY.md §2.7 U1–U2) plus the standard set surface
-the reference lacks but any engine user expects (intersect/except).
-"""
+"""Set operations (SURVEY.md §2.7 U1–U2)."""
 
 from __future__ import annotations
 
@@ -17,15 +15,3 @@ def union_all(*dfs: DataFrame, allow_missing: bool = False) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing),
         dfs)
-
-
-def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b).distinct()
-
-
-def intersect_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersect(b)
-
-
-def except_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)

@@ -23,6 +23,11 @@ a raw document table into packed training shards:
     SemDeDup runs separately on the embeddings table
     (dedup/semantic.py) because it keys on vectors, not text.
 
+``STAGES`` below is the one definition of the gate chain's boundaries
+— their order, their audit drop reasons and their kinds — shared by
+this batch chain, the streaming chain (streaming/curation.py) and
+both per-document audits (:func:`drop_lineage`).
+
 Stages compose as Catalyst chains between PINNED fan-out boundaries
 (session.pin — the scrub input, the dedup survivor sets): a boundary
 consumed by two downstream subtrees materializes once instead of
@@ -35,7 +40,9 @@ beyond the stages themselves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dedup import (
@@ -47,7 +54,7 @@ from ..dedup import (
 from ..dedup.decontaminate import decontaminate
 from ..dedup.winnow import fingerprint_overlap_pairs
 from ..operators.dsir import dsir_resample
-from ..functions.gopher import gopher_filter
+from ..functions.gopher import first_failing_rule, gopher_filter
 from ..functions.quality_model import model_quality_filter
 from ..functions.redact import redact_documents
 from ..functions import text as Tx
@@ -55,6 +62,181 @@ from ..operators.chunking import chunk_sequences
 from ..operators.sampling import cap_per_group, pack_by_budget
 from ..session import pin
 from ..sources.io import write_jsonl
+
+
+class Stage(NamedTuple):
+    """One boundary of the curation gate chain.
+
+    ``kind`` is ``input`` / ``chunk`` (the chain's two ends, never an
+    audit stage), ``projection`` (rewrites text, never drops),
+    ``flag`` (a row-local keep predicate; ``flag`` names the column
+    the fused streaming prefix materializes it as), ``filter`` (a
+    row-local gate that is not a flag: the model scorer) or
+    ``shuffle`` (needs an exchange: dedup, selection, quotas)."""
+    key: str
+    reason: str | None      # audit drop label; None: never drops
+    kind: str
+    flag: str | None = None
+
+
+# Every boundary key either chain hands to ``stage_hook``, in chain
+# order. Keys and reasons are output values (the audits' stage/reason
+# columns) and span names — never rename them. The batch chain calls
+# the Gopher gate ``after_quality`` and the stream ``after_gopher``;
+# decontamination is a map-side flag in the stream and a broadcast
+# join (``decontaminate``) in the batch chain.
+STAGES = (
+    Stage("input", None, "input"),
+    Stage("stream_input", None, "input"),
+    Stage("after_html_extract", None, "projection"),
+    Stage("curation_flags", None, "projection"),
+    Stage("after_lang_filter", "wrong_language", "flag", "__lang"),
+    Stage("after_quality", "gopher", "flag", "__gopher"),
+    Stage("after_gopher", "gopher", "flag", "__gopher"),
+    Stage("after_repetition", "ngram_repetition", "shuffle"),
+    Stage("after_model_quality", "quality_model", "filter"),
+    Stage("after_redaction", None, "projection"),
+    Stage("after_line_dedup", "emptied_by_line_scrub", "shuffle"),
+    Stage("after_exact_dedup", "exact_duplicate", "shuffle"),
+    Stage("after_near_dedup", "near_duplicate", "shuffle"),
+    Stage("after_overlap_dedup", "verbatim_overlap", "shuffle"),
+    Stage("after_decontamination", "benchmark_contaminated", "flag",
+          "__decon"),
+    Stage("after_stream_dedup", "exact_duplicate", "shuffle"),
+    Stage("after_history_dedup", "history_duplicate", "shuffle"),
+    Stage("after_dsir_selection", "not_selected_dsir", "shuffle"),
+    Stage("after_source_cap", "source_quota", "shuffle"),
+    Stage("chunks", None, "chunk"),
+)
+STAGE = {s.key: s for s in STAGES}     # in chain order too
+
+
+def boundary(stage_hook, key: str, frame: DataFrame) -> DataFrame:
+    """Apply the ``stage_hook`` protocol at one boundary: the hook's
+    DataFrame return replaces ``frame``; any other return (None, a
+    count) leaves it as is."""
+    r = stage_hook(key, frame) if stage_hook is not None else None
+    return r if isinstance(r, DataFrame) else frame
+
+
+def _gate_text(docs: DataFrame, captured: list) -> DataFrame:
+    """(doc_id, text) as the gates saw it: the captured
+    ``after_html_extract`` boundary when extraction ran, else the
+    raw input — a tag-soup page that extracts to '' must be judged on
+    its extracted text, not its markup (review r15)."""
+    return next((f for k, f in captured if k == "after_html_extract"),
+                docs).select("doc_id", "text")
+
+
+def _when_chain(pairs) -> Column:
+    """CASE WHEN c1 THEN v1 WHEN c2 THEN v2 … END (NULL when none
+    holds)."""
+    out = None
+    for cond, value in pairs:
+        out = F.when(cond, value) if out is None \
+            else out.when(cond, value)
+    return out
+
+
+def _flag_attribution(flags: DataFrame, keys: set, enrich: dict):
+    """(survivors, drop parts) for the flag-kind boundaries ``keys``
+    that follow a fused ``curation_flags`` boundary, read from that
+    pinned frame alone: each doc's first failing flag in table order
+    is one ``when`` chain, with ``coalesce(flag, False)`` matching
+    the filters' NULL drops — row-identical to anti-joins, because
+    those boundaries are cumulative filters over the same flags."""
+    gates = [s for s in STAGES
+             if s.key in keys and s.flag in flags.columns]
+    stage = F.col("stage")
+    attrib = flags.select("doc_id", "source", _when_chain(
+        (~F.coalesce(F.col(s.flag), F.lit(False)), F.lit(s.key))
+        for s in gates).alias("stage"))
+    rest = attrib.filter(stage.isNotNull()).select(
+        "doc_id", "source", "stage",
+        _when_chain((stage == s.key, F.lit(s.reason))
+                    for s in gates).alias("reason"),
+        F.lit(None).cast("string").alias("detail"))
+    refined = []
+    for s in gates:
+        if s.key in enrich:
+            refined.append(enrich[s.key](rest.filter(stage == s.key),
+                                         flags))
+            rest = rest.filter(stage != s.key)
+    survivors = attrib.filter(stage.isNull()).select("doc_id", "source")
+    return survivors, [rest, *refined]
+
+
+def drop_lineage(docs: DataFrame, captured: list, min_words: int,
+                 enrich: dict | None = None,
+                 emptied: dict | None = None) -> DataFrame:
+    """(doc_id, source, stage, reason, detail) for every row of
+    ``docs``: the FIRST captured boundary that dropped it, or
+    ``stage="kept"`` — the drop-lineage walk behind both
+    :func:`curation_audit` and the streaming ingest audit.
+
+    ``captured`` holds the chain's (key, frame) boundaries in hook
+    order; boundaries without a ``STAGES`` reason are skipped. Drops
+    are id-only anti-joins between consecutive boundaries (survivors
+    carry on as a semi-join), labelled with the stage's reason.
+    Per-key refinements:
+
+    * a Gopher-gate drop names its first failing rule, re-flagged
+      over the drop-sized subset against the text the gates saw;
+    * ``enrich[key](dropped, frame)`` rewrites that stage's labelled
+      drops (e.g. ``detail`` = the kept twin of a duplicate);
+    * ``emptied[key](frame)`` names the docs a stage EMPTIED instead
+      of dropping (the line scrub) — they are attributed there;
+    * a ``curation_flags`` boundary (the fused streaming prefix)
+      attributes every later flag-kind stage in ONE projection
+      (:func:`_flag_attribution`) instead of anti-joins."""
+    text = _gate_text(docs, captured)
+
+    def first_rule(dropped, frame):
+        return (dropped.join(text, "doc_id")
+                .select("doc_id", "source", "stage",
+                        first_failing_rule(F.col("text"),
+                                           min_words=min_words)
+                        .alias("reason"), "detail"))
+
+    enrich = {**{s.key: first_rule for s in STAGES
+                 if s.reason == "gopher"}, **(enrich or {})}
+    emptied = emptied or {}
+    keys = [k for k, _ in captured]
+    null = F.lit(None).cast("string")
+    prev = docs.select("doc_id", "source")
+    parts: list[DataFrame] = []
+    fused: set = set()
+    for key, frame in captured:
+        if key == "curation_flags":
+            fused = {k for k in keys[keys.index(key):]
+                     if STAGE[k].kind == "flag"}
+            prev, flag_parts = _flag_attribution(frame, fused, enrich)
+            parts += flag_parts
+            continue
+        reason = STAGE[key].reason
+        if reason is None or key in fused:
+            continue
+        if key in emptied:
+            ids = emptied[key](frame)
+            dropped = prev.join(ids, "doc_id", "semi")
+            prev = prev.join(ids, "doc_id", "left_anti")
+        else:
+            ids = frame.select("doc_id")
+            dropped = prev.join(ids, "doc_id", "left_anti")
+            prev = prev.join(ids, "doc_id", "semi")
+        dropped = (dropped.withColumn("stage", F.lit(key))
+                   .withColumn("reason", F.lit(reason))
+                   .withColumn("detail", null))
+        if key in enrich:
+            dropped = enrich[key](dropped, frame)
+        parts.append(dropped)
+
+    out = (prev.withColumn("stage", F.lit("kept"))
+           .withColumn("reason", F.lit("kept"))
+           .withColumn("detail", null))
+    for p in parts:
+        out = out.unionByName(p)
+    return out.select("doc_id", "source", "stage", "reason", "detail")
 
 
 def curation_frame(docs: DataFrame,
@@ -80,18 +262,17 @@ def curation_frame(docs: DataFrame,
     writes JSONL shards, the bench runs it through the noop sink to
     time pure compute. Fan-out boundaries materialize eagerly at
     build time (see below); everything between them stays one lazy
-    Catalyst chain.
+    Catalyst chain. ``dsir_n_docs`` defaults to half the RAW input
+    count.
 
-    ``stage_hook(key, frame)``, when given, is called at every stage
-    boundary — ``curate_and_export`` uses it for the per-stage audit
-    counts. A hook that returns the row count (as the audit tally
-    does) lets the DSIR default reuse it instead of re-counting the
-    raw corpus. A hook that returns a **DataFrame** REPLACES the
-    boundary frame in the chain — the injection point
+    ``stage_hook(key, frame)`` — the one hook protocol every curation
+    chain shares (:func:`boundary`): called at every stage boundary,
+    with the keys and order of ``STAGES``. A returned **DataFrame**
+    REPLACES the boundary frame in the chain — the injection point
     `curation_audit` uses to pin each stage's output so every stage
-    evaluates exactly once instead of once per downstream prefix
-    (any value-preserving wrap is legal; changing the rows is the
-    hook author's foot-gun).
+    evaluates exactly once (any value-preserving wrap is legal;
+    changing the rows is the hook author's foot-gun). Any other
+    return value (None, a tally count) is ignored.
 
     Fan-out boundaries consumed by MORE THAN ONE downstream subtree
     (the scrub input, the exact-dedup output, the near-dup survivor
@@ -104,15 +285,11 @@ def curation_frame(docs: DataFrame,
     construction-lazy; it still computes everything from the inputs
     on every call, and the caller-visible rows are unchanged in
     every pin-durability mode."""
-    def hook(key: str, frame: DataFrame):
-        if stage_hook is None:
-            return None, frame, False
-        r = stage_hook(key, frame)
-        if isinstance(r, DataFrame):
-            return None, r, True
-        return r, frame, False
+    def hook(key: str, frame: DataFrame, fan_out: bool = False):
+        out = boundary(stage_hook, key, frame)
+        return pin(out) if fan_out and out is frame else out
 
-    input_n, docs, _ = hook("input", docs)
+    docs = raw = hook("input", docs)
 
     if html_input:
         # web-crawl front door (C4 §2.1 / RefinedWeb §3.1): markup +
@@ -121,8 +298,9 @@ def curation_frame(docs: DataFrame,
         # projection — Catalyst fuses it into the gopher_filter scan,
         # adding zero jobs or shuffles (functions/html.py).
         from ..functions.html import extract_html_text
-        docs = docs.withColumn("text", extract_html_text(F.col("text")))
-        _, docs, _ = hook("after_html_extract", docs)
+        docs = hook("after_html_extract",
+                    docs.withColumn("text",
+                                    extract_html_text(F.col("text"))))
 
     if lang_keep is not None:
         # language gate BEFORE the quality rules (the CCNet /
@@ -130,12 +308,12 @@ def curation_frame(docs: DataFrame,
         # quality/dedup compute): marker-stopword language ID
         # (functions/text.py::detect_lang) — a pure codegen
         # predicate, fused into the same scan as everything else
-        docs = docs.filter(Tx.detect_lang(F.col("text"))
-                           .isin(list(lang_keep)))
-        _, docs, _ = hook("after_lang_filter", docs)
+        docs = hook("after_lang_filter",
+                    docs.filter(Tx.detect_lang(F.col("text"))
+                                .isin(list(lang_keep))))
 
-    quality = gopher_filter(docs, min_words=min_words)
-    _, quality, _ = hook("after_quality", quality)
+    quality = hook("after_quality", gopher_filter(docs,
+                                                  min_words=min_words))
 
     if repetition_rules:
         # the aggregation half of the Gopher rule set (A1 top/dup
@@ -143,16 +321,14 @@ def curation_frame(docs: DataFrame,
         # shuffle over the quality survivors only — after the cheap
         # projection gate, before any dedup pays per-doc cost
         from ..functions.gopher import repetition_filter
-        quality = repetition_filter(quality)
-        _, quality, _ = hook("after_repetition", quality)
+        quality = hook("after_repetition", repetition_filter(quality))
 
     if quality_model is not None:
         # learned second gate (functions/quality_model.py): scoring
         # is a broadcast-model map pass, no shuffle added.
-        quality = model_quality_filter(
+        quality = hook("after_model_quality", model_quality_filter(
             quality, quality_model,
-            threshold=quality_model_threshold).drop("quality_prob")
-        _, quality, _ = hook("after_model_quality", quality)
+            threshold=quality_model_threshold).drop("quality_prob"))
 
     clean = redact_documents(quality)
 
@@ -163,30 +339,25 @@ def curation_frame(docs: DataFrame,
         # consumes its input twice (stats pass + rewrite pass) — pin
         # the gate/redaction prefix so both passes read one
         # materialization instead of re-running the upstream chain.
-        clean = pin(clean)
-        clean = remove_repeated_lines(clean,
-                                      min_chars=line_dedup_min_chars)
-        _, clean, _ = hook("after_line_dedup", clean)
+        clean = hook("after_line_dedup", remove_repeated_lines(
+            pin(clean), min_chars=line_dedup_min_chars))
 
-    deduped = exact_dedup(clean).drop("fingerprint")
-    _, deduped, replaced = hook("after_exact_dedup", deduped)
-    if not replaced:
-        # fan-out: consumed by the MinHash pair mine AND the survivor
-        # window below
-        deduped = pin(deduped)
+    # fan-out: consumed by the MinHash pair mine AND the survivor
+    # window below
+    deduped = hook("after_exact_dedup",
+                   exact_dedup(clean).drop("fingerprint"), fan_out=True)
 
     pairs = minhash_band_pairs(deduped, jaccard_threshold)
     # keep the longest doc per near-dup cluster (id tiebreak)
     withlen = deduped.withColumn("__len", F.length("text"))
-    canon = (canonical_docs(withlen, pairs, prefer_col="__len")
-             .drop("__len", "cluster_id"))
-    _, canon, replaced = hook("after_near_dedup", canon)
-    if not replaced and (overlap_shared is not None
-                        or benchmark is not None):
-        # fan-out: the winnow stage consumes canon for fingerprints
-        # AND the keep-longest window; decontamination consumes it
-        # for the shingle probe AND the anti-join pass-through
-        canon = pin(canon)
+    # fan-out: the winnow stage consumes canon for fingerprints AND
+    # the keep-longest window; decontamination consumes it for the
+    # shingle probe AND the anti-join pass-through
+    canon = hook("after_near_dedup",
+                 canonical_docs(withlen, pairs, prefer_col="__len")
+                 .drop("__len", "cluster_id"),
+                 fan_out=overlap_shared is not None
+                 or benchmark is not None)
 
     if overlap_shared is not None:
         # verbatim-overlap (winnowed fingerprint) dedup: same
@@ -194,42 +365,45 @@ def curation_frame(docs: DataFrame,
         ov = fingerprint_overlap_pairs(canon, min_shared=overlap_shared,
                                        max_doc_freq=1000)
         withlen = canon.withColumn("__len", F.length("text"))
-        canon = (canonical_docs(withlen, ov, prefer_col="__len")
-                 .drop("__len", "cluster_id"))
-        _, canon, replaced = hook("after_overlap_dedup", canon)
-        if not replaced and benchmark is not None:
-            canon = pin(canon)
+        canon = hook("after_overlap_dedup",
+                     canonical_docs(withlen, ov, prefer_col="__len")
+                     .drop("__len", "cluster_id"),
+                     fan_out=benchmark is not None)
 
     if benchmark is not None:
-        canon = decontaminate(canon, benchmark)
-        _, canon, replaced = hook("after_decontamination", canon)
-        if not replaced and dsir_target is not None:
-            # DSIR consumes its raw side twice (feature pass + the
-            # final selected join)
-            canon = pin(canon)
+        # DSIR consumes its raw side twice (feature pass + the final
+        # selected join)
+        canon = hook("after_decontamination",
+                     decontaminate(canon, benchmark),
+                     fan_out=dsir_target is not None)
 
     if dsir_target is not None:
-        n_sel = dsir_n_docs or max(
-            1, (input_n if input_n is not None else docs.count()) // 2)
-        canon = dsir_resample(canon, dsir_target, n_sel) \
-            .drop("logw", "key")
-        _, canon, _ = hook("after_dsir_selection", canon)
+        n_sel = dsir_n_docs or _dsir_default_n(raw.count())
+        canon = hook("after_dsir_selection",
+                     dsir_resample(canon, dsir_target, n_sel)
+                     .drop("logw", "key"))
 
     if max_docs_per_source is not None:
         # RefinedWeb-style per-source quota AFTER dedup/selection so
         # the cap counts surviving docs, not raw crawl volume.
-        canon = cap_per_group(canon, ["source"], max_docs_per_source)
-        _, canon, _ = hook("after_source_cap", canon)
+        canon = hook("after_source_cap",
+                     cap_per_group(canon, ["source"],
+                                   max_docs_per_source))
 
     # `source` rides the chunk explode instead of a join-back against
     # canon — the join re-evaluated the whole surviving chain once
     # more just to attach one metadata column (guide §2.4); the
     # carried column produces the identical rows.
-    chunks = chunk_sequences(canon, seq_len, carry_cols=("source",))
-    _, chunks, _ = hook("chunks", chunks)
+    chunks = hook("chunks", chunk_sequences(canon, seq_len,
+                                            carry_cols=("source",)))
 
     return pack_by_budget(chunks, shard_budget, "n_tokens",
                           ["source"], id_col="doc_id")
+
+
+def _dsir_default_n(n_raw: int) -> int:
+    """DSIR's default selection size: half the raw input."""
+    return max(1, n_raw // 2)
 
 
 def curate_and_export(docs: DataFrame, out_dir: str,
@@ -248,12 +422,15 @@ def curate_and_export(docs: DataFrame, out_dir: str,
     100 TB mode when the audit comes from the written manifest
     instead."""
     stats: dict = {}
+    if not lazy_stats:
+        # the input count doubles as the DSIR default's raw count
+        stats["input"] = docs.count()
+        kwargs["dsir_n_docs"] = (kwargs.get("dsir_n_docs")
+                                 or _dsir_default_n(stats["input"]))
 
     def tally(key: str, frame: DataFrame):
-        if not lazy_stats:
+        if not lazy_stats and key not in stats:
             stats[key] = frame.count()
-            return stats[key]
-        return None
 
     packed = curation_frame(docs, stage_hook=tally, **kwargs)
     write_jsonl(packed.repartition("source", "shard")
@@ -277,9 +454,9 @@ def curation_audit(docs: DataFrame, min_words: int = 50,
 
     Built from the same lazy chain as :func:`curation_frame` (every
     keyword forwards): each doc-grain stage boundary is captured via
-    the existing ``stage_hook``, drops are id-only anti-joins between
-    consecutive boundaries, and reasons are enriched where the stage
-    has per-document structure to expose —
+    the ``stage_hook`` and walked by :func:`drop_lineage`; reasons
+    are the ``STAGES`` labels, enriched where the stage has
+    per-document structure to expose —
 
     * the Gopher gate names the FIRST FAILING RULE (`gopher.flags`,
       evaluated only over the dropped subset);
@@ -311,38 +488,13 @@ def curation_audit(docs: DataFrame, min_words: int = 50,
     not CPU, is now the budget: sample (``docs.sample(...)``) when
     stage-count × corpus exceeds scratch disk."""
     from ..dedup.exact import fingerprint_docs
-    from ..functions.gopher import flags as gopher_flags_fn
-    from ..session import pin
 
-    reasons = {
-        "after_lang_filter": "wrong_language",
-        "after_quality": "gopher",           # enriched below
-        "after_repetition": "ngram_repetition",
-        "after_model_quality": "quality_model",
-        "after_line_dedup": "emptied_by_line_scrub",
-        "after_exact_dedup": "exact_duplicate",
-        "after_near_dedup": "near_duplicate",
-        "after_overlap_dedup": "verbatim_overlap",
-        "after_decontamination": "benchmark_contaminated",
-        "after_dsir_selection": "not_selected_dsir",
-        "after_source_cap": "source_quota",
-    }
     captured: list[tuple[str, DataFrame]] = []
-    # reason-enrichment must see the text the STAGES saw: under
-    # html_input the gopher rules (and the dedup fingerprint key)
-    # run on post-extraction text, so a tag-soup page with many raw
-    # "words" that extracts to '' must be re-flagged against the
-    # extracted text, not the markup (review r15)
-    text_source = [docs]
 
     def capture(key, frame):
-        if key == "after_html_extract":
-            pinned = pin(frame)
-            if pin_handles is not None:
-                pin_handles.append(pinned)
-            text_source[0] = pinned
-            return pinned
-        if key not in reasons:
+        # the extraction boundary is pinned too: the reasons re-read
+        # the text the stages saw (_gate_text)
+        if STAGE[key].reason is None and key != "after_html_extract":
             return None              # input / chunk-grain stages
         pinned = pin(frame)
         if pin_handles is not None:
@@ -352,86 +504,35 @@ def curation_audit(docs: DataFrame, min_words: int = 50,
 
     curation_frame(docs, stage_hook=capture, min_words=min_words,
                    **kwargs)
-    text_docs = text_source[0]
+    fp = fingerprint_docs(_gate_text(docs, captured)) \
+        .select("doc_id", "fingerprint")
 
-    prev = docs.select("doc_id", "source")
-    parts: list[DataFrame] = []
-    for key, frame in captured:
-        if key not in reasons:
-            continue                     # input / chunk-grain stages
-        if key == "after_line_dedup":
-            # the scrub never DROPS a doc — it empties the ones whose
-            # every line was boilerplate, and the husks die later at
-            # exact dedup (all empty texts share one fingerprint).
-            # Attribute them HERE, where the cause is (review r10
-            # finding: the anti-join at this boundary is always empty
-            # and the husks were mislabeled exact_duplicate).
-            # "empty" must mean what the FINGERPRINT means by it: a
-            # husk reduced to whitespace/newlines only (trim strips
-            # spaces, not \n — review r10) normalizes to zero tokens
-            emptied = (frame.filter(
-                F.size(Tx.norm_tokens(F.col("text"))) == 0)
+    def raw_twin(dropped, frame):
+        # the dropped doc's RAW fingerprint joined to the min-id doc
+        # sharing it AMONG THE STAGE'S SURVIVORS — so detail can only
+        # ever name a doc that is actually in the corpus (review
+        # r10). A collision CREATED by an upstream rewrite
+        # (redaction, line scrub) has no surviving raw twin — detail
+        # stays NULL there; stage and reason are exact regardless.
+        kept = (fp.join(frame.select("doc_id"), "doc_id", "semi")
+                .groupBy("fingerprint")
+                .agg(F.min("doc_id").alias("__kept")))
+        return (dropped.drop("detail")
+                .join(fp, "doc_id")
+                .join(kept, "fingerprint", "left")
+                .select("doc_id", "source", "stage", "reason",
+                        F.col("__kept").cast("string").alias("detail")))
+
+    def scrub_husks(frame):
+        # "empty" must mean what the FINGERPRINT means by it: a husk
+        # reduced to whitespace/newlines only (trim strips spaces,
+        # not \n — review r10) normalizes to zero tokens
+        return (frame.filter(F.size(Tx.norm_tokens(F.col("text"))) == 0)
                 .select("doc_id"))
-            parts.append(prev.join(emptied, "doc_id", "semi")
-                         .withColumn("stage", F.lit(key))
-                         .withColumn("reason",
-                                     F.lit(reasons[key]))
-                         .withColumn("detail",
-                                     F.lit(None).cast("string")))
-            prev = prev.join(emptied, "doc_id", "left_anti")
-            continue
-        cur = frame.select("doc_id")
-        dropped = (prev.join(cur, "doc_id", "left_anti")
-                   .withColumn("stage", F.lit(key))
-                   .withColumn("reason", F.lit(reasons[key]))
-                   .withColumn("detail",
-                               F.lit(None).cast("string")))
-        if key == "after_quality":
-            # name the first failing rule: re-flag ONLY the dropped
-            # docs (map-side over a drop-sized join back to text)
-            txt = dropped.join(text_docs.select("doc_id", "text"),
-                               "doc_id")
-            rule_flags = gopher_flags_fn(F.col("text"),
-                                         min_words=min_words)
-            first_fail = F.coalesce(
-                *[F.when(~passes, F.lit(name))
-                  for name, passes in rule_flags.items()],
-                F.lit("null_text"))
-            dropped = txt.select(
-                "doc_id", "source", "stage",
-                first_fail.alias("reason"),
-                F.lit(None).cast("string").alias("detail"))
-        elif key == "after_exact_dedup":
-            # name the kept twin: the dropped doc's RAW fingerprint
-            # joined to the min-id doc sharing it AMONG THE STAGE'S
-            # SURVIVORS — so detail can only ever name a doc that is
-            # actually in the corpus (review r10: an unrestricted
-            # min-per-raw-fingerprint could name a fellow DROPPED doc
-            # when the pipeline deduped on rewritten text). A
-            # collision CREATED by an upstream rewrite (redaction,
-            # line scrub) has no surviving raw twin — detail stays
-            # NULL there; stage and reason are exact regardless.
-            fp = fingerprint_docs(text_docs).select("doc_id",
-                                                    "fingerprint")
-            canon = (fp.join(cur, "doc_id", "semi")
-                     .groupBy("fingerprint")
-                     .agg(F.min("doc_id").alias("__kept")))
-            dropped = (dropped.drop("detail")
-                       .join(fp, "doc_id")
-                       .join(canon, "fingerprint", "left")
-                       .select("doc_id", "source", "stage", "reason",
-                               F.col("__kept").cast("string")
-                               .alias("detail")))
-        parts.append(dropped)
-        prev = prev.join(cur, "doc_id", "semi")
 
-    kept = (prev.withColumn("stage", F.lit("kept"))
-            .withColumn("reason", F.lit("kept"))
-            .withColumn("detail", F.lit(None).cast("string")))
-    out = kept
-    for p in parts:
-        out = out.unionByName(p)
-    return out.select("doc_id", "source", "stage", "reason", "detail")
+    return drop_lineage(docs, captured, min_words,
+                        enrich={"after_exact_dedup": raw_twin},
+                        emptied={"after_line_dedup": scrub_husks})
 
 
 def curation_report(docs: DataFrame) -> DataFrame:
@@ -512,7 +613,8 @@ def curation_sequences(docs: DataFrame, seq_len: int = 2048,
                        sep_tokens: int = 1,
                        stage_hook=None, **kwargs) -> DataFrame:
     """The trainer-facing output mode: run the SAME gate chain as
-    :func:`curation_frame` (every keyword forwards), then emit
+    :func:`curation_frame` (every keyword forwards, ``stage_hook``
+    included — same protocol, same ``STAGES`` order), then emit
     cross-document packed-sequence manifests
     (``operators.chunking.assemble_sequences`` → one record per
     training sequence, per-source streams) instead of per-doc chunk
@@ -528,34 +630,27 @@ def curation_sequences(docs: DataFrame, seq_len: int = 2048,
     from ..operators.chunking import assemble_sequences, sequence_manifest
 
     captured: dict = {}
-    # boundaries that can be the curated corpus the manifest reads —
-    # pin them via the replacement protocol (unless the user hook
-    # already replaced), so the manifest consumes a materialization
-    # and the chain's own internal fan-out pins are not duplicated
-    terminal = ("after_source_cap", "after_dsir_selection",
-                "after_decontamination", "after_overlap_dedup",
-                "after_near_dedup")
+    # boundaries that can be the curated corpus the manifest reads,
+    # latest first — pin them in-chain (unless the user hook already
+    # replaced them), so the manifest consumes a materialization and
+    # the chain's own internal fan-out pins are not duplicated
+    keys = list(STAGE)
+    terminal = keys[keys.index("after_near_dedup"):
+                    keys.index("chunks")][::-1]
 
     def capture(key, frame):
-        from ..session import pin
-
-        r = stage_hook(key, frame) if stage_hook is not None else None
-        # when the user hook exercises the DataFrame-replacement
-        # protocol (e.g. a pin-injecting audit hook), the chain runs
-        # on the replacement — record THAT frame, or the manifest
-        # below would silently re-evaluate the unpinned original
-        # (review r11 finding)
-        if not isinstance(r, DataFrame) and key in terminal:
-            r = pin(frame)
-        captured[key] = r if isinstance(r, DataFrame) else frame
-        return r
+        # record what the chain runs on: the user hook's replacement,
+        # or the manifest below would silently re-evaluate the
+        # unpinned original (review r11 finding)
+        out = boundary(stage_hook, key, frame)
+        if out is frame and key in terminal:
+            out = pin(frame)
+        captured[key] = out
+        return out
 
     curation_frame(docs, stage_hook=capture, **kwargs)
     # the last doc-grain stage that ran is the curated corpus
-    for key in terminal:
-        if key in captured:
-            canon = captured[key]
-            break
+    canon = next(captured[k] for k in terminal if k in captured)
     spans = assemble_sequences(canon, seq_len, sep_tokens,
                                group_cols=("source",))
     return sequence_manifest(spans, group_cols=("source",))

@@ -53,6 +53,7 @@ from ..dedup.decontaminate import DEFAULT_NGRAM
 from ..dedup.ngram import shingle_docs
 from ..functions.quality_model import model_quality_filter
 from ..functions.redact import redact_documents
+from ..pipelines.curation import STAGE, STAGES, boundary, drop_lineage
 from ..session import pin
 from .dedup_stream import (
     incremental_dedup,
@@ -184,170 +185,38 @@ def _stream_batch_audit(batch_df: DataFrame,
     each input doc's FIRST dropping stage, or ``stage="kept"`` — the
     streaming face of :func:`pipelines.curation.curation_audit`
     (verdict r11 #8: at 100 TB curation runs AS the streaming loop,
-    and "why did doc X vanish" must be answerable there too). Same
-    audit mechanics over the ``curate_document_stream`` boundaries:
-    drops are id-only anti-joins between consecutive pinned
-    boundaries, the Gopher gate names its first failing rule
-    (re-flagged over the drop-sized subset only), the within-batch
-    exact dedup names the kept twin sharing the post-redaction
-    fingerprint, and against-history drops are
-    ``history_duplicate``.
-
-    Under the FUSED chain (r17 — a ``curation_flags`` boundary is
-    present) the map-side stages need no joins at all: the pinned
-    flags carry one boolean per gate, so each doc's first failing
-    map gate is a ``when`` chain over ONE read of the flags pin
-    (:func:`_map_stage_attribution`) — row-identical to the
-    anti-joins because the boundaries ARE cumulative flag filters
-    (a NULL flag drops in the filter and attributes here via
-    ``coalesce(flag, False)``). The dedup/history stages keep the
-    join mechanics (their survivor sets come from real shuffles)."""
+    and "why did doc X vanish" must be answerable there too). The
+    same :func:`~pipelines.curation.drop_lineage` walk over the
+    ``curate_document_stream`` boundaries: the Gopher gate names its
+    first failing rule, the within-batch exact dedup names the kept
+    twin sharing the post-redaction fingerprint, and against-history
+    drops are ``history_duplicate``. Under the FUSED chain (a
+    ``curation_flags`` boundary is present) the map-side stages are
+    attributed from ONE read of the pinned flags instead of
+    anti-joins; the dedup/history stages keep the join mechanics
+    (their survivor sets come from real shuffles)."""
     from ..functions import text as Tx
-    from ..functions.gopher import flags as gopher_flags_fn
 
-    reasons = {
-        "after_lang_filter": "wrong_language",
-        "after_gopher": "gopher",            # enriched below
-        "after_model_quality": "quality_model",
-        "after_decontamination": "benchmark_contaminated",
-        "after_stream_dedup": "exact_duplicate",
-        "after_history_dedup": "history_duplicate",
-    }
-    flags = next((f for k, f in captured if k == "curation_flags"),
-                 None)
-    skip: set = set()
-    if flags is not None:
-        prev, parts = _map_stage_attribution(flags, captured,
-                                             batch_df, min_words)
-        skip = {"after_lang_filter", "after_gopher",
-                "after_decontamination"}
-    else:
-        prev = batch_df.select("doc_id", "source")
-        parts = []
-    for key, frame in captured:
-        if key not in reasons or key in skip:
-            continue                 # stream_input / fused map stages
-        cur = frame.select("doc_id")
-        dropped = (prev.join(cur, "doc_id", "left_anti")
-                   .withColumn("stage", F.lit(key))
-                   .withColumn("reason", F.lit(reasons[key]))
-                   .withColumn("detail",
-                               F.lit(None).cast("string")))
-        if key == "after_gopher":
-            # re-flag against the text the gate SAW: the extraction
-            # boundary when html_input ran, else the raw batch
-            # (review r15 — raw tag-soup word counts name the wrong
-            # rule for pages that extract to empty)
-            pre_gopher = next(
-                (f for k, f in captured
-                 if k == "after_html_extract"), batch_df)
-            txt = dropped.join(pre_gopher.select("doc_id", "text"),
-                               "doc_id")
-            rule_flags = gopher_flags_fn(F.col("text"),
-                                         min_words=min_words)
-            first_fail = F.coalesce(
-                *[F.when(~passes, F.lit(name))
-                  for name, passes in rule_flags.items()],
-                F.lit("null_text"))
-            dropped = txt.select(
-                "doc_id", "source", "stage",
-                first_fail.alias("reason"),
-                F.lit(None).cast("string").alias("detail"))
-        elif key == "after_stream_dedup":
-            # name the kept twin: survivors carry the fingerprint the
-            # dedup keyed on (post-redaction text); recompute it for
-            # the drop-sized subset only. history drops at the NEXT
-            # boundary share this fingerprint space, so the twin here
-            # is always a doc the batch actually kept at this stage.
-            twins = (frame.select(
-                F.col("fingerprint"),
-                F.col("doc_id").cast("string").alias("detail")))
-            dropped_fp = (dropped.drop("detail")
-                          .join(captured_text(captured, batch_df),
-                                "doc_id")
-                          .withColumn("fingerprint",
-                                      Tx.fingerprint(F.col("text"))))
-            dropped = (dropped_fp
-                       .join(twins, "fingerprint", "left")
-                       .select("doc_id", "source", "stage",
-                               "reason", "detail"))
-        parts.append(dropped)
-        prev = prev.join(cur, "doc_id", "semi")
-    kept = (prev.withColumn("stage", F.lit("kept"))
-            .withColumn("reason", F.lit("kept"))
-            .withColumn("detail", F.lit(None).cast("string")))
-    out = kept
-    for p in parts:
-        out = out.unionByName(p)
-    return out.select("doc_id", "source", "stage", "reason",
-                      "detail")
+    def redacted_twin(dropped, frame):
+        # survivors carry the fingerprint the dedup keyed on; recompute
+        # it for the drop-sized subset from the text the dedup SAW —
+        # the boundary before it (post-redaction: raw batch text would
+        # mis-fingerprint any doc the redaction rewrote). History drops
+        # at the NEXT boundary share this fingerprint space, so the
+        # twin is always a doc the batch kept at this stage.
+        keys = [k for k, _ in captured]
+        i = keys.index("after_stream_dedup")
+        seen = captured[i - 1][1] if i else batch_df
+        return (dropped.drop("detail")
+                .join(seen.select("doc_id", "text"), "doc_id")
+                .withColumn("fingerprint", Tx.fingerprint(F.col("text")))
+                .join(frame.select("fingerprint", F.col("doc_id")
+                                   .cast("string").alias("detail")),
+                      "fingerprint", "left")
+                .select("doc_id", "source", "stage", "reason", "detail"))
 
-
-def _map_stage_attribution(flags: DataFrame, captured, batch_df,
-                           min_words: int):
-    """(map-stage survivors, [drop parts]) from the pinned
-    ``curation_flags`` frame alone (r17): each doc's first failing
-    map gate is a ``when`` chain in stage order — lang, gopher,
-    decon — with ``coalesce(flag, False)`` matching the filters'
-    NULL-drops. Replaces three anti-join + semi-join pairs (six
-    broadcast joins re-reading the flags pin) with one projection;
-    the gopher reason enrichment keeps its drop-sized text join
-    against the text the gate saw."""
-    from ..functions.gopher import flags as gopher_flags_fn
-
-    cols = set(flags.columns)
-
-    def ok(c):
-        return F.coalesce(F.col(c), F.lit(False)) if c in cols \
-            else F.lit(True)
-
-    stage = (F.when(~ok("__lang"), F.lit("after_lang_filter"))
-             .when(~ok("__gopher"), F.lit("after_gopher"))
-             .when(~ok("__decon"), F.lit("after_decontamination")))
-    attrib = flags.select("doc_id", "source", stage.alias("stage"))
-    dropped = attrib.filter(F.col("stage").isNotNull())
-    non_gopher = (dropped.filter(F.col("stage") != "after_gopher")
-                  .select("doc_id", "source", "stage",
-                          F.when(F.col("stage") == "after_lang_filter",
-                                 F.lit("wrong_language"))
-                          .otherwise(F.lit("benchmark_contaminated"))
-                          .alias("reason"),
-                          F.lit(None).cast("string").alias("detail")))
-    # re-flag gopher drops against the text the gate SAW: the
-    # extraction boundary when html_input ran, else the raw batch
-    # (review r15 — raw tag-soup word counts name the wrong rule for
-    # pages that extract to empty). Drop-sized join, like before.
-    pre_gopher = next((f for k, f in captured
-                       if k == "after_html_extract"), batch_df)
-    txt = (dropped.filter(F.col("stage") == "after_gopher")
-           .join(pre_gopher.select("doc_id", "text"), "doc_id"))
-    rule_flags = gopher_flags_fn(F.col("text"), min_words=min_words)
-    first_fail = F.coalesce(
-        *[F.when(~passes, F.lit(name))
-          for name, passes in rule_flags.items()],
-        F.lit("null_text"))
-    gopher_part = txt.select(
-        "doc_id", "source", "stage", first_fail.alias("reason"),
-        F.lit(None).cast("string").alias("detail"))
-    survivors = (attrib.filter(F.col("stage").isNull())
-                 .select("doc_id", "source"))
-    return survivors, [non_gopher, gopher_part]
-
-
-def captured_text(captured: list[tuple[str, DataFrame]],
-                  batch_df: DataFrame) -> DataFrame:
-    """(doc_id, text) as the within-batch dedup SAW it: the latest
-    captured boundary before the dedup stage (``after_redaction`` or
-    ``after_decontamination``) carries the post-redaction text the
-    fingerprint keyed on; raw ``batch_df`` text would mis-fingerprint
-    any doc the redaction rewrote."""
-    best = None
-    for key, frame in captured:
-        if key == "after_stream_dedup":
-            break
-        best = frame
-    src = best if best is not None else batch_df
-    return src.select("doc_id", "text")
+    return drop_lineage(batch_df, captured, min_words,
+                        enrich={"after_stream_dedup": redacted_twin})
 
 
 def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
@@ -536,17 +405,18 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
             # pinned:
             # * stream_input — the audit reads input ids from
             #   batch_df directly (review r12);
-            # * the fused map-side boundaries (r17) — cumulative
-            #   FILTERS over the pinned ``curation_flags`` frame;
-            #   pinning a filter-of-a-checkpoint re-materializes the
-            #   same bytes for nothing;
+            # * the fused map-side boundaries (r17) — the flag and
+            #   projection stages after ``curation_flags``: cumulative
+            #   FILTERS over that pinned frame; pinning a
+            #   filter-of-a-checkpoint re-materializes the same bytes
+            #   for nothing;
             # * the final boundary — _process_locked pins the chain
             #   result as ``curated`` and patches it back in.
             if key == "stream_input":
                 return frame
-            if key == last_key or (quality_model is None and key in (
-                    "after_lang_filter", "after_gopher",
-                    "after_redaction", "after_decontamination")):
+            fused = any(k == "curation_flags" for k, _ in captured)
+            if key == last_key or (fused and STAGE[key].kind in (
+                    "flag", "projection")):
                 captured.append((key, frame))
                 return frame
             pinned = pin(frame)
@@ -666,13 +536,12 @@ def curate_document_stream(stream_docs: DataFrame,
     to the Bloom-gated exact form: identical answer, join shuffle
     bounded by the "maybe" rows.
 
-    ``stage_hook(key, frame)`` — the same DataFrame-return protocol
-    as :func:`pipelines.curation.curation_frame` (verdict r11 #8):
-    called at every doc-grain stage boundary; a returned DataFrame
-    REPLACES the boundary in-chain (so an audit capture can pin each
-    boundary and the chain evaluates once). Hooks that pin are for
-    BATCH frames (foreachBatch / backfills) — a hook on a genuine
-    readStream frame must stay lazy.
+    ``stage_hook(key, frame)`` — the hook protocol of
+    :func:`pipelines.curation.curation_frame` (verdict r11 #8), at
+    every doc-grain boundary in ``STAGES`` order (so an audit capture
+    can pin each boundary and the chain evaluates once). Hooks that
+    pin are for BATCH frames (foreachBatch / backfills) — a hook on a
+    genuine readStream frame must stay lazy.
 
     ``expr_cache`` — an optional caller-owned dict the gate Columns
     are memoized into (r16): the predicates/projections built here
@@ -682,10 +551,7 @@ def curate_document_stream(stream_docs: DataFrame,
     argument changes; ``make_curation_ingest_batch_fn`` scopes one
     per loop."""
     def hook(key: str, frame: DataFrame) -> DataFrame:
-        if stage_hook is None:
-            return frame
-        r = stage_hook(key, frame)
-        return r if r is not None else frame
+        return boundary(stage_hook, key, frame)
 
     if expr_cache is not None:
         # config fingerprint (ADVICE r16): the cached Columns are only
@@ -710,15 +576,16 @@ def curate_document_stream(stream_docs: DataFrame,
                 "one dict per loop configuration")
 
     def expr(key, build):
-        # ``expr_cache`` (r16): gate predicates/projections are plan-
-        # independent Column expressions whose only inputs are the
-        # loop-constant arguments, but BUILDING them costs driver
-        # py4j round trips per F.* call (~0.23 s/chain; the
-        # shingle-lambda conversion alone ~0.1 s). A long-lived
-        # caller passes one dict per loop and every micro-batch after
-        # the first reuses the built Columns — the same once-per-loop
-        # hoist as the benchmark-shingle literal. One-shot callers
-        # pass nothing and build fresh, same expressions either way.
+        # ``expr_cache`` (r16), keyed by the boundary the Column
+        # gates: gate predicates/projections are plan-independent
+        # Column expressions whose only inputs are the loop-constant
+        # arguments, but BUILDING them costs driver py4j round trips
+        # per F.* call (~0.23 s/chain; the shingle-lambda conversion
+        # alone ~0.1 s). A long-lived caller passes one dict per loop
+        # and every micro-batch after the first reuses the built
+        # Columns — the same once-per-loop hoist as the
+        # benchmark-shingle literal. One-shot callers pass nothing and
+        # build fresh, same expressions either way.
         if expr_cache is None:
             return build()
         col = expr_cache.get(key)
@@ -735,33 +602,47 @@ def curate_document_stream(stream_docs: DataFrame,
         from ..functions.html import extract_html_text
         out = hook("after_html_extract",
                    out.withColumn("text", expr(
-                       "html_extract",
+                       "after_html_extract",
                        lambda: extract_html_text(F.col("text")))))
+    from pyspark.sql import Column
+
     from ..functions.gopher import all_pass as gopher_all_pass
     from ..functions.redact import redact_text
+    from ..functions.text import detect_lang
 
-    # resolve the benchmark shingles once — both chain shapes below
-    # need them. ``bench_shingles`` lets a long-lived caller (the
-    # ingest loop) collect the benchmark's shingle set once and reuse
-    # it across batches instead of re-running the collection job at
-    # every plan build; passing the frame alone keeps the one-shot
-    # call sites unchanged.
-    shingles = None
+    # the row-local flag gates, by boundary key: each one's KEEP
+    # predicate (None: the stage runs but keeps every row — a
+    # benchmark with no shingles). ``STAGES`` orders them.
+    gates = {"after_gopher": expr(
+        "after_gopher",
+        lambda: gopher_all_pass(F.col("text"), min_words=min_words))}
+    if lang_keep is not None:
+        # language gate before quality (CCNet order)
+        gates["after_lang_filter"] = expr(
+            "after_lang_filter",
+            lambda: detect_lang(F.col("text")).isin(list(lang_keep)))
     if benchmark is not None:
+        # ``bench_shingles`` lets a long-lived caller (the ingest
+        # loop) collect the benchmark's shingle set once and reuse it
+        # across batches instead of re-running the collection job at
+        # every plan build; passing the frame alone keeps the
+        # one-shot call sites unchanged. Only the loop's literal
+        # Column is cacheable (a list's contents are not in the
+        # expr_cache config fingerprint).
         shingles = bench_shingles if bench_shingles is not None \
             else benchmark_shingle_set(
                 benchmark, decontaminate_n, bench_text_col,
                 bench_id_col)
-    from pyspark.sql import Column
-
-    def decon_cond():
         if isinstance(shingles, Column):
-            return expr("decon_keep",
-                        lambda: stream_decon_condition(
-                            shingles, decontaminate_n, min_overlap))
-        return stream_decon_condition(
-            F.array(*[F.lit(s) for s in shingles]),
-            decontaminate_n, min_overlap)
+            gates["after_decontamination"] = expr(
+                "after_decontamination",
+                lambda: stream_decon_condition(
+                    shingles, decontaminate_n, min_overlap))
+        else:
+            gates["after_decontamination"] = stream_decon_condition(
+                F.array(*[F.lit(s) for s in shingles]),
+                decontaminate_n, min_overlap) if shingles else None
+    red = expr("after_redaction", lambda: redact_text(F.col("text")))
 
     # FUSED map-side prefix under a stage_hook (r17, guide §2.4/§1.2):
     # with an audit hook attached, every map-side boundary used to be
@@ -770,7 +651,7 @@ def curate_document_stream(stream_docs: DataFrame,
     # materializations of overlapping row sets per micro-batch
     # (builder-measured: the 6 audit pins cost ~0.85 s/batch, the
     # dominant audit overhead). All of those gates are pure row-local
-    # expressions over one scan, so the hooked chain now computes ONE
+    # expressions over one scan, so the hooked chain computes ONE
     # flag projection — (…, __lang, __gopher, redacted text,
     # __decon) — hands it to the hook as the ``curation_flags``
     # boundary (the audit pins exactly this one frame), and every
@@ -784,83 +665,50 @@ def curate_document_stream(stream_docs: DataFrame,
     # e.g. the decon shingle build for gopher-dropped rows), which
     # buys back ~3 materialization jobs per batch — the right side of
     # the trade whenever most rows pass, and only the hooked (audit)
-    # path pays it; the un-hooked chain below is untouched. The
-    # redacted text is projected FIRST and ``__decon`` computed over
-    # the projected attribute in a SECOND select: CollapseProject
-    # refuses to inline the non-cheap redaction regex chain into two
-    # consumers, so redaction still evaluates once per row.
-    # quality_model breaks the map-side run (a model scorer between
-    # gopher and redaction), so that configuration keeps the
-    # sequential per-boundary shape.
-    if stage_hook is not None and quality_model is None:
-        flag_cols = []
-        if lang_keep is not None:
-            from ..functions.text import detect_lang
-            flag_cols.append(expr(
-                "lang_keep",
-                lambda: detect_lang(F.col("text"))
-                .isin(list(lang_keep))).alias("__lang"))
-        flag_cols.append(expr(
-            "gopher_pass",
-            lambda: gopher_all_pass(F.col("text"),
-                                    min_words=min_words))
-            .alias("__gopher"))
-        red = expr("redact", lambda: redact_text(F.col("text")))
+    # path pays it; the un-hooked chain is untouched. The redacted
+    # text is projected FIRST and the flags of gates AFTER redaction
+    # (``__decon``) computed over the projected attribute in a SECOND
+    # select: CollapseProject refuses to inline the non-cheap
+    # redaction regex chain into two consumers, so redaction still
+    # evaluates once per row. quality_model breaks the map-side run
+    # (a model scorer between gopher and redaction), so that
+    # configuration keeps the sequential per-boundary shape.
+    fused = stage_hook is not None and quality_model is None
+    if fused:
+        # flags of gates before the redaction read the raw text,
+        # those after it the redacted text
+        red_at = list(STAGE).index("after_redaction")
+        pre, post = [], []
+        for i, s in enumerate(STAGES):
+            if gates.get(s.key) is not None:
+                (pre if i < red_at else post).append(
+                    gates[s.key].alias(s.flag))
         flagged = out.select(
             *[red.alias("text") if c == "text" else F.col(c)
-              for c in out.columns], *flag_cols)
-        has_decon = benchmark is not None and (
-            isinstance(shingles, Column) or bool(shingles))
-        if has_decon:
-            flagged = flagged.withColumn("__decon", decon_cond())
+              for c in out.columns], *pre)
+        if post:
+            flagged = flagged.select("*", *post)
         out = hook("curation_flags", flagged)
-        if lang_keep is not None:
-            out = hook("after_lang_filter", out.filter(F.col("__lang")))
-        out = hook("after_gopher", out.filter(F.col("__gopher")))
-        out = hook("after_redaction", out)
-        if benchmark is not None:
-            out = hook("after_decontamination",
-                       out.filter(F.col("__decon")) if has_decon
-                       else out)
-        out = out.drop("__lang", "__gopher", "__decon")
-    else:
-        if lang_keep is not None:
-            # language gate before quality (CCNet order) — a pure
-            # codegen predicate, stream-safe like every other gate
-            from ..functions.text import detect_lang
-            out = hook("after_lang_filter",
-                       out.filter(expr(
-                           "lang_keep",
-                           lambda: detect_lang(F.col("text"))
-                           .isin(list(lang_keep)))))
-        # filter(all_pass) is row- and column-identical to
-        # gopher_filter (whose flag projections exist only to be
-        # pruned again); the direct predicate makes the gate a
-        # cacheable Column
-        out = hook("after_gopher",
-                   out.filter(expr(
-                       "gopher_pass",
-                       lambda: gopher_all_pass(F.col("text"),
-                                               min_words=min_words))))
-        if quality_model is not None:
-            out = hook("after_model_quality", model_quality_filter(
+    for s in STAGES:
+        if s.key in gates:
+            if gates[s.key] is not None:
+                out = out.filter(F.col(s.flag) if fused
+                                 else gates[s.key])
+        elif s.key == "after_model_quality" and quality_model is not None:
+            out = model_quality_filter(
                 out, quality_model,
-                threshold=quality_model_threshold)
-                .drop("quality_prob"))
-        # rewrites text, never drops — the boundary exists so an
-        # audit hook can capture the POST-redaction text the dedup
-        # fingerprint keys on (no reason label; it can never be a
-        # dropping stage)
-        out = hook("after_redaction",
-                   out.withColumn("text", expr(
-                       "redact",
-                       lambda: redact_text(F.col("text")))))
-        if benchmark is not None:
-            if isinstance(shingles, Column) or shingles:
-                out = hook("after_decontamination",
-                           out.filter(decon_cond()))
-            else:
-                out = hook("after_decontamination", out)
+                threshold=quality_model_threshold).drop("quality_prob")
+        elif s.key == "after_redaction":
+            # rewrites text, never drops — the boundary exists so an
+            # audit hook can capture the POST-redaction text the
+            # dedup fingerprint keys on
+            if not fused:
+                out = out.withColumn("text", red)
+        else:
+            continue
+        out = hook(s.key, out)
+    if fused:
+        out = out.drop(*{s.flag for s in STAGES if s.flag})
     if ts_col is not None and dedup_delay is not None:
         out = hook("after_stream_dedup",
                    incremental_dedup_watermarked(out, ts_col,
@@ -876,6 +724,7 @@ def curate_document_stream(stream_docs: DataFrame,
             out = out.join(history, "fingerprint", "left_anti")
         out = hook("after_history_dedup", out)
     return out
+
 
 
 # ------------------------------------------------------------------
