@@ -40,6 +40,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import fs_path
+
 _EPS = 1e-6     # share smoothing: empty bins contribute finitely
 
 # exact_edges auto-selection: above this reference row count the exact
@@ -412,9 +414,7 @@ def save_drift_artifacts(spark, path: str, edges_by_col: dict,
     recomputed per run."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = fs_path(spark, path)
     out = fs.create(jpath, True)
     try:
         payload = {"edges": edges_by_col,
@@ -430,12 +430,10 @@ def load_drift_artifacts(spark, path: str) -> tuple[dict, dict]:
     repr doubles)."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = fs_path(spark, path)
     stream = fs.open(jpath)
     try:
-        util = jvm.org.apache.commons.io.IOUtils
+        util = spark._jvm.org.apache.commons.io.IOUtils
         data = util.toByteArray(stream)
     finally:
         stream.close()

@@ -105,6 +105,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from ..sources.io import fs_path
 from .ann import _cell_key, _make_planes, _prep, _probe_cells, _score_pairs
 
 _META = "_index_meta"
@@ -126,9 +127,7 @@ def _has_legacy_cells(spark: SparkSession, index_dir: str) -> bool:
     """True when ``cells/`` holds round-9-layout cell directories
     directly (no ``v=N`` level) — readable as implicit version 0
     until a compaction migrates them to ``v=1``."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = fs_path(spark, f"{index_dir}/{_CELLS}")
     if not fs.exists(root):
         return False
     for st in fs.listStatus(root):
@@ -307,10 +306,8 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
     # a rebuild resets the version history: delete the whole cells
     # root (overwrite mode would only clear v=1, leaving stale later
     # versions as "latest"), then publish the fresh layout as v=1
-    jvm = spark._jvm
-    jcells = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    jcells.getFileSystem(spark._jsc.hadoopConfiguration()) \
-        .delete(jcells, True)
+    fs, jcells = fs_path(spark, f"{index_dir}/{_CELLS}")
+    fs.delete(jcells, True)
     (assigned.write.mode("overwrite").partitionBy("cell")
      .parquet(f"{index_dir}/{_CELLS}/v=1"))
     # re-gate AFTER the cells write — the longest phase in the
@@ -333,11 +330,7 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
             "i int, lo double, hi double")
          .write.mode("overwrite").parquet(f"{index_dir}/{_RANGES}"))
     else:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_RANGES}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        fs.delete(fs_path(spark, f"{index_dir}/{_RANGES}")[1], True)
     # a rebuild re-learns ranges, so the predecessor's saturation
     # history (measurements AGAINST the old ranges) must not survive
     # to be trended alongside the new ones — and its delete markers
@@ -345,10 +338,7 @@ def _build_ann_index_unlocked(corpus, index_dir, dim, n_planes,
     # (the corpus passed to a rebuild IS the serving intent)
     from ..sources.io import drop_state_dir
 
-    jvm = spark._jvm
-    jsat = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_SATURATION}")
-    jsat.getFileSystem(spark._jsc.hadoopConfiguration()) \
-        .delete(jsat, True)
+    fs.delete(fs_path(spark, f"{index_dir}/{_SATURATION}")[1], True)
     drop_state_dir(spark, f"{index_dir}/{_DELETES}")
     (spark.createDataFrame([(int(dim), int(n_planes))],
                            "dim int, n_planes int")
@@ -383,9 +373,7 @@ _ARTIFACT_LOCK = threading.Lock()
 
 
 def _artifact_sig(spark: SparkSession, path: str) -> tuple | None:
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jp = fs_path(spark, path)
     if not fs.exists(jp):
         return None
     summ = fs.getContentSummary(jp)
@@ -431,9 +419,7 @@ def _read_ranges(spark: SparkSession, index_dir: str) -> list | None:
     """The frozen quantization ranges, or None for a float-only
     index. Hadoop-FS existence check so object stores work the same
     as local FS."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_RANGES}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = fs_path(spark, f"{index_dir}/{_RANGES}")
     if not fs.exists(jpath):
         return None
     from ..sources.io import read_hidden_parquet
@@ -565,9 +551,7 @@ def saturation_history(spark: SparkSession, index_dir: str
     per monitored append, schema per `append_to_index`), or None when
     no appends have been monitored yet — the operational surface an
     operator trends to schedule a rebuild before recall erodes."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_SATURATION}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = fs_path(spark, f"{index_dir}/{_SATURATION}")
     if not fs.exists(jpath):
         return None
     from ..sources.io import read_hidden_parquet
@@ -811,16 +795,11 @@ def _marker_state_sig(spark: SparkSession,
     """Filesystem signature of the marker state `read_state_dir`
     would resolve (live dir, else the crash-parked ``__bak``), or
     None when absent."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     base = f"{index_dir}/{_DELETES}"
     for p in (base, base + "__bak"):
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        fs = jp.getFileSystem(conf)
-        if fs.exists(jp):
-            summ = fs.getContentSummary(jp)
-            return (p, fs.getFileStatus(jp).getModificationTime(),
-                    summ.getFileCount(), summ.getLength())
+        sig = _artifact_sig(spark, p)
+        if sig is not None:
+            return (p, *sig)
     return None
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vectors as V
 from ..session import pin, resolve_kernel
+from ..sources.io import fs_path
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -303,10 +304,7 @@ def save_codebooks(spark, cents: list, path: str) -> None:
     run, not something retrained per batch."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, jpath = fs_path(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(json.dumps(cents).encode("utf-8")))
@@ -320,13 +318,10 @@ def load_codebooks(spark, path: str) -> list:
     the same repr doubles back)."""
     import json
 
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, jpath = fs_path(spark, path)
     stream = fs.open(jpath)
     try:
-        util = jvm.org.apache.commons.io.IOUtils
+        util = spark._jvm.org.apache.commons.io.IOUtils
         data = util.toByteArray(stream)
     finally:
         stream.close()

@@ -14,11 +14,22 @@ unlike the reference's ``lapply(read_csv) %>% bind_rows``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import pin
+
+
+def fs_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` — the engine's one Hadoop
+    FileSystem lookup. Listing, existence checks, deletes and renames
+    all go through the Hadoop FS API, so the same code runs against
+    local FS, HDFS or any object store with a Hadoop connector — no
+    ``os``/``glob`` path assumptions."""
+    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jp.getFileSystem(
+        spark._jsc.hadoopConfiguration()), jp  # type: ignore[union-attr]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -260,10 +271,7 @@ def verify_parquet_manifest(spark: SparkSession, path: str) -> dict:
     # the EXPLICIT current file set: verification must see the
     # filesystem as it is now, not the session's FileStatusCache view
     # of a directory it read before the tampering.
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, jpath = fs_path(spark, path)
     files = [s.getPath().toString() for s in fs.listStatus(jpath)
              if s.getPath().getName().endswith(".parquet")]
     spark.catalog.refreshByPath(path)
@@ -354,10 +362,7 @@ def write_parquet_zordered(df: DataFrame, path: str, zorder_by: list[str],
 def snapshot_versions(spark: SparkSession, table_dir: str) -> list[int]:
     """Existing version numbers under a snapshot table (``v=N``
     children), via the Hadoop FS API (any scheme)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, jpath = fs_path(spark, table_dir)
     if not fs.exists(jpath):
         return []
     out = []
@@ -446,38 +451,29 @@ def compact_parquet(spark: SparkSession, path: str,
     the streaming ANN index ingest, whose crash replays double-append
     rows that are result-identical but cost scan bytes).
 
-    All listing and renaming goes through the Hadoop FileSystem API,
-    so the same code runs against local FS, HDFS, or any object store
-    with a Hadoop connector — no ``os``/``glob`` path assumptions.
-    The rewrite is staged through a sibling temp dir, then swapped in
-    with two FS renames. The swap is NOT atomic: there is a brief
-    window (old→backup, tmp→final) in which the path does not exist,
-    so treat compaction as stop-the-world per directory — schedule it
-    when no reader is mid-scan of that path. Any failure during or
-    after the swap restores the backup to the original path before
-    re-raising, so the directory is never left missing.
+    The rewrite goes live through the crash-safe directory replace
+    (`_swap_dir`: staged at ``__compact_tmp``, parked at
+    ``__compact_old``), healing a previous run's kill first. The
+    swap is not atomic, so treat compaction as stop-the-world per
+    directory — schedule it when no reader is mid-scan of that path.
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
+    root = path.rstrip("/")
+    staged, parked = root + "__compact_tmp", root + "__compact_old"
+    _heal_dir(spark, root, parked)
+    fs, jroot = fs_path(spark, root)
 
-    def _jpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    root = _jpath(path.rstrip("/"))
-    fs = root.getFileSystem(conf)
-
-    def _list_parquet(p):
+    def _list_parquet():
         out = []
-        it = fs.listFiles(p, True)  # recursive
+        it = fs.listFiles(jroot, True)  # recursive
         while it.hasNext():
             st = it.next()
             if st.getPath().getName().endswith(".parquet"):
                 out.append(st)
         return out
 
-    before = _list_parquet(root)
+    before = _list_parquet()
     total_bytes = sum(st.getLen() for st in before)
     out_bytes = total_bytes
     df = spark.read.parquet(path)
@@ -490,8 +486,6 @@ def compact_parquet(spark: SparkSession, path: str,
         # pass exists to fix. The pre-dedupe count is parquet-footer
         # metadata; the deduped frame is PINNED so its shuffle runs
         # once for the sizing count and the rewrite reuses it.
-        from ..session import pin
-
         total_rows = df.count()
         df = pinned = pin(df.dropDuplicates(list(dedupe_by)))
         if total_rows > 0:
@@ -500,40 +494,9 @@ def compact_parquet(spark: SparkSession, path: str,
     out = df.repartition(int(n_out))
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-
-    tmp = _jpath(path.rstrip("/") + "__compact_tmp")
-    backup = _jpath(path.rstrip("/") + "__compact_old")
-    fs.delete(tmp, True)
-    # A leftover backup can only be stale: if a prior run died MID-swap
-    # (data only in backup), the dataset path would not exist and the
-    # spark.read above would already have failed — reaching this point
-    # means the live data is at `path`, so any existing backup is a
-    # prior run's undeleted copy. It must go now: Hadoop rename into an
-    # existing directory nests the source INSIDE it, which would
-    # corrupt both the swap and the rollback.
-    fs.delete(backup, True)
     try:
-        try:
-            out.write.mode("overwrite").parquet(tmp.toString())
-        except Exception:
-            fs.delete(tmp, True)    # no partial staging left behind
-            raise
-
-        swapped_out = False
-        try:
-            if not fs.rename(root, backup):
-                raise IOError(f"rename {root} -> {backup} failed")
-            swapped_out = True
-            if not fs.rename(tmp, root):
-                raise IOError(f"rename {tmp} -> {root} failed")
-        except Exception:
-            # Restore the original directory before surfacing the
-            # error — a failed compaction must leave the dataset
-            # readable.
-            if swapped_out and not fs.exists(root):
-                fs.rename(backup, root)
-            fs.delete(tmp, True)
-            raise
+        _stage_dir(spark, out.write, staged)
+        _swap_dir(spark, root, staged, parked)
     finally:
         # Free the sizing pin once the rewrite no longer needs it:
         # callers like compact_index invoke this once PER cell
@@ -542,105 +505,139 @@ def compact_parquet(spark: SparkSession, path: str,
         # GC. No-op for the localCheckpoint flavor.
         if pinned is not None:
             pinned.unpersist(blocking=False)
-    fs.delete(backup, True)
-    spark.catalog.refreshByPath(path)
+    return {"files_before": len(before),
+            "files_after": len(_list_parquet()), "bytes": total_bytes}
 
-    after = len(_list_parquet(root))
-    return {"files_before": len(before), "files_after": after,
-            "bytes": total_bytes}
+
+def _stage_dir(spark: SparkSession, writer: DataFrameWriter, staged: str,
+               gate: tuple[str, str] | None = None) -> None:
+    """Stage step of the crash-safe directory replace (`_swap_dir`):
+    write ``writer``'s rows to the sibling dir ``staged``, then run
+    the caller's ``commit_gate(spark, *gate)``. Any failure — a
+    `WriterLeaseConflict` from the gate included — deletes the
+    staged dir before re-raising, so a dethroned writer leaves no
+    copy behind and never publishes it."""
+    fs, jstaged = fs_path(spark, staged)
+    fs.delete(jstaged, True)
+    try:
+        writer.mode("overwrite").parquet(staged)
+        if gate is not None:
+            # looked up at call time: the gate may be wrapped or
+            # replaced on the lease module
+            from . import lease
+
+            lease.commit_gate(spark, *gate)
+    except Exception:
+        fs.delete(jstaged, True)
+        raise
+
+
+def _heal_dir(spark: SparkSession, live: str, parked: str) -> bool:
+    """Heal step of the crash-safe directory replace (`_swap_dir`):
+    when ``live`` is absent and ``parked`` exists, a kill between the
+    swap's two renames stranded the data — rename it back, checking
+    the rename (a failed heal followed by the swap's stale-copy
+    delete would destroy the only copy). Costs one ``exists`` when
+    ``live`` exists. Returns True when a heal happened."""
+    fs, jlive = fs_path(spark, live)
+    if fs.exists(jlive):
+        return False
+    jparked = fs_path(spark, parked)[1]
+    if not fs.exists(jparked):
+        return False
+    if not fs.rename(jparked, jlive):
+        raise IOError(f"heal rename {parked} -> {live} failed")
+    spark.catalog.refreshByPath(live)
+    return True
+
+
+def _swap_dir(spark: SparkSession, live: str, staged: str,
+              parked: str) -> None:
+    """The crash-safe directory replace: the one protocol behind
+    every writer that rewrites a live directory (compacted parquet
+    dirs, delete-marker and tombstone state dirs, the curated and
+    semantic corpora). An in-place ``mode("overwrite")`` deletes the
+    old files before the new ones commit, so a crash there loses the
+    directory; instead:
+
+    1. Stage (`_stage_dir`): the new rows commit to the sibling
+       ``staged`` dir; a failure, or the caller's `commit_gate`
+       raising, deletes it and re-raises — ``live`` is untouched.
+    2. Heal (`_heal_dir`): ``live`` absent with ``parked`` present
+       means a kill between the two renames of step 3 — the parked
+       copy is renamed back.
+    3. Swap (here): heal, drop a stale ``parked`` copy (``live``
+       holds the data, and a Hadoop rename into an existing dir
+       would nest inside it), rename ``live`` → ``parked``, then
+       ``staged`` → ``live``. If either rename fails the parked copy
+       is restored and the staged dir deleted before re-raising;
+       otherwise the parked copy is deleted.
+    4. Heal before write: every writer heals before it reads or
+       appends to ``live`` — an append into an absent live dir would
+       shadow the parked data, and the next swap would delete that
+       data as a stale copy.
+
+    A kill before the first rename leaves ``live`` intact; between
+    the renames, the data is parked and the next writer's heal (or
+    `read_state_dir`'s fallback) recovers it; after the second, the
+    next swap deletes the stale parked copy. The swap's own heal
+    runs after staging, so staged rows whose lineage reads the parked
+    copy (a `read_state_dir` fallback) materialize while those files
+    still exist. ``live`` is absent between the renames: a swap is
+    stop-the-world per directory. The dir names
+    are the callers': ``__new``/``__bak`` for state dirs,
+    ``__compact_tmp``/``__compact_old`` for `compact_parquet`,
+    ``_compacting``/``_compact_old`` for the curated and semantic
+    corpora."""
+    fs, jlive = fs_path(spark, live)
+    jstaged, jparked = fs_path(spark, staged)[1], fs_path(spark, parked)[1]
+    parked_out = False
+    try:
+        _heal_dir(spark, live, parked)
+        fs.delete(jparked, True)
+        if fs.exists(jlive):
+            if not fs.rename(jlive, jparked):
+                raise IOError(f"rename {live} -> {parked} failed")
+            parked_out = True
+        if not fs.rename(jstaged, jlive):
+            raise IOError(f"rename {staged} -> {live} failed")
+    except Exception:
+        if parked_out and not fs.exists(jlive):
+            fs.rename(jparked, jlive)
+        fs.delete(jstaged, True)
+        raise
+    fs.delete(jparked, True)
+    spark.catalog.refreshByPath(live)
 
 
 def replace_state_dir(df: DataFrame, path: str) -> None:
     """Replace a SMALL state-carrying parquet dir (delete markers,
-    tombstone indexes) with ``df``'s rows, crash-safely: the new rows
-    COMMIT to a ``__new`` staging dir first, then two renames swap it
-    live with the old state parked at ``__bak`` until the swap
-    completes. An in-place ``mode("overwrite")`` deletes the old
-    files before the new ones commit — a crash there LOSES the state
-    (review r10: compliance markers vanishing is strictly worse than
-    any staleness). Worst crash window here leaves the PRE-replace
-    state at ``__bak``, which :func:`read_state_dir` falls back to —
-    state can regress one step (conservative: previously-hidden rows
-    stay hidden), never vanish. A prior crash is healed AFTER the
-    staged write, not before: callers build ``df`` from
-    :func:`read_state_dir`, whose post-crash fallback reads ``__bak``
-    — healing first would rename the very files the write is about to
-    recompute from (ADVICE r10: the documented crash-recovery path
-    failed with FileNotFoundException on its first exercise). Safe to
-    call with a ``df`` whose lineage READS ``path`` (live or
-    ``__bak``): the write targets the staging dir, and the renames
-    move files without recomputation."""
-    spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _jp(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    live = _jp(path.rstrip("/"))
-    tmp = _jp(path.rstrip("/") + "__new")
-    bak = _jp(path.rstrip("/") + "__bak")
-    fs = live.getFileSystem(conf)
-    fs.delete(tmp, True)
-    try:
-        # Materialize FIRST: if a prior replace crashed mid-swap the
-        # state lives only at __bak and df's lineage points there —
-        # this write is the last moment those files are guaranteed
-        # to exist under that name.
-        df.write.mode("overwrite").parquet(tmp.toString())
-    except Exception:
-        fs.delete(tmp, True)
-        raise
-    if not fs.exists(live) and fs.exists(bak):
-        # heal a prior mid-swap; the rename result MUST be checked
-        # before the unconditional backup delete below — a failed
-        # heal followed by delete(bak) would destroy the only
-        # surviving copy of the state (review r11)
-        if not fs.rename(bak, live):
-            fs.delete(tmp, True)
-            raise IOError(f"replace_state_dir: heal rename "
-                          f"{bak} -> {live} failed")
-    fs.delete(bak, True)
-    swapped = False
-    try:
-        if fs.exists(live):
-            if not fs.rename(live, bak):
-                raise IOError(f"rename {live} -> {bak} failed")
-            swapped = True
-        if not fs.rename(tmp, live):
-            raise IOError(f"rename {tmp} -> {live} failed")
-    except Exception:
-        if swapped and not fs.exists(live):
-            fs.rename(bak, live)
-        fs.delete(tmp, True)
-        raise
-    fs.delete(bak, True)
-    spark.catalog.refreshByPath(path)
+    tombstone indexes) with ``df``'s rows through the crash-safe
+    directory replace (`_swap_dir`: staged at ``__new``, parked at
+    ``__bak``). The worst crash window leaves the PRE-replace state
+    at ``__bak``, which :func:`read_state_dir` falls back to — state
+    can regress one step (conservative: previously-hidden rows stay
+    hidden), never vanish. Safe to call with a ``df`` whose lineage
+    READS ``path`` (live or ``__bak``): the write targets the
+    staging dir, and the renames move files without
+    recomputation."""
+    live = path.rstrip("/")
+    _stage_dir(df.sparkSession, df.write, live + "__new")
+    _swap_dir(df.sparkSession, live, live + "__new", live + "__bak")
 
 
 def heal_state_dir(spark: SparkSession, path: str) -> bool:
-    """Heal a crash-parked `replace_state_dir` swap: when the live
-    dir is ABSENT and the pre-crash state sits at ``__bak``, rename
-    it back live. MUST be called before any ``mode("append")`` write
-    into a state dir (ADVICE r10: an append after an unhealed crash
-    creates a fresh live dir holding only the new rows, and
-    :func:`read_state_dir` — which prefers live — then permanently
-    ignores the parked markers, silently resurrecting every
-    pre-crash takedown/tombstone). Reads stay write-free: the heal
-    belongs to WRITERS, which the maintenance lease already
-    serializes. Returns True when a heal happened."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    bak = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__bak")
-    fs = live.getFileSystem(conf)
-    if not fs.exists(live) and fs.exists(bak):
-        if not fs.rename(bak, live):
-            raise IOError(f"heal_state_dir: rename {bak} -> {live} "
-                          f"failed")
-        spark.catalog.refreshByPath(path)
-        return True
-    return False
+    """The heal step (`_heal_dir`) for a `replace_state_dir`-managed
+    dir. MUST be called before any ``mode("append")`` write into a
+    state dir: an append after an unhealed crash creates a fresh
+    live dir holding only the new rows, and :func:`read_state_dir` —
+    which prefers live — then permanently ignores the parked
+    markers, silently resurrecting every pre-crash
+    takedown/tombstone. Reads stay write-free: the heal belongs to
+    WRITERS, which the maintenance lease already serializes. Returns
+    True when a heal happened."""
+    live = path.rstrip("/")
+    return _heal_dir(spark, live, live + "__bak")
 
 
 def read_hidden_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -653,10 +650,7 @@ def read_hidden_parquet(spark: SparkSession, path: str) -> DataFrame:
     part files (never produced by an engine write, but cheap to
     guard) fall back to the plain read — identical semantics, one
     warn."""
-    jvm = spark._jvm
-    glob = path.rstrip("/") + "/part-*"
-    jp = jvm.org.apache.hadoop.fs.Path(glob)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jp = fs_path(spark, path.rstrip("/") + "/part-*")
     matches = fs.globStatus(jp)
     if matches is not None and len(matches) > 0:
         # hand the read the CONCRETE matched files, not the glob
@@ -676,15 +670,10 @@ def read_state_dir(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a `replace_state_dir`-managed dir: the live dir, else the
     ``__bak`` parked by a mid-swap crash (one step stale —
     conservative for hide-lists), else None."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    live = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = live.getFileSystem(conf)
-    if fs.exists(live):
-        return read_hidden_parquet(spark, path)
-    bak = path.rstrip("/") + "__bak"
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(bak)):
-        return read_hidden_parquet(spark, bak)
+    for p in (path.rstrip("/"), path.rstrip("/") + "__bak"):
+        fs, jp = fs_path(spark, p)
+        if fs.exists(jp):
+            return read_hidden_parquet(spark, p)
     return None
 
 
@@ -692,9 +681,7 @@ def drop_state_dir(spark: SparkSession, path: str) -> None:
     """Delete a `replace_state_dir`-managed dir AND its crash
     leftovers (``__bak`` / ``__new``) — a GC that leaves a stale
     backup behind would resurrect the state at the next read."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     for p in (path.rstrip("/"), path.rstrip("/") + "__bak",
               path.rstrip("/") + "__new"):
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        jp.getFileSystem(conf).delete(jp, True)
+        fs, jp = fs_path(spark, p)
+        fs.delete(jp, True)

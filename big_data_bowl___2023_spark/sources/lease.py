@@ -77,6 +77,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from .io import fs_path as _fs_path
+
 LEASE_SUFFIX = "__lease"
 EPOCH_SUFFIX = "__epoch"
 DEFAULT_TTL_S = 3600.0
@@ -115,12 +117,6 @@ _HELD_LOCK = threading.Lock()
 
 def _held_key(root: str) -> tuple[int, str]:
     return (threading.get_ident(), os.path.abspath(root.rstrip("/")))
-
-
-def _fs_path(spark: SparkSession, p: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
 def _read_json(spark: SparkSession, fs, jp) -> dict:

@@ -55,6 +55,7 @@ from ..similarity.index import (
     build_ann_index,
     index_versions,
 )
+from ..sources.io import _heal_dir, _stage_dir, fs_path
 
 
 def make_ann_index_batch_fn(index_dir: str, dim: int = 64,
@@ -74,17 +75,13 @@ def make_ann_index_batch_fn(index_dir: str, dim: int = 64,
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        jvm = spark._jvm
         # gate on the meta DIRECTORY, not its _SUCCESS marker: with
         # success markers disabled (a common object-store committer
         # setting) a marker gate would see "no index" forever and
         # every batch would REBUILD with overwrite — silent loss of
         # all prior vectors. A directory that exists but is torn
         # fails safe instead: append_to_index's _read_meta raises.
-        meta_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_META}")
-        fs = meta_path.getFileSystem(
-            spark._jsc.hadoopConfiguration())
+        fs, meta_path = fs_path(spark, f"{index_dir}/{_META}")
         if fs.exists(meta_path):
             append_to_index(batch_df, index_dir, vec_col, id_col)
         else:
@@ -106,7 +103,7 @@ def _list_parquet_stats(fs, root):
     return n, b
 
 
-def _clean_stale_tmps(fs, jvm, cells_root) -> None:
+def _clean_stale_tmps(fs, cells_root) -> None:
     """Delete staging leftovers of compactions that died mid-write.
     Staged dirs never match the ``v=`` pattern, so they were always
     INVISIBLE to readers and version listing — this is pure disk
@@ -117,27 +114,22 @@ def _clean_stale_tmps(fs, jvm, cells_root) -> None:
             fs.delete(st.getPath(), True)
 
 
-def _heal_legacy_swaps(jvm, fs, root) -> None:
-    """Round-9 upgrade healer: the old per-cell swap compactor could
-    die between its two renames, leaving ``cell=X`` MISSING with the
-    data stranded at ``cell=X__compact_old``. Before a legacy layout
-    is read for migration, restore any such backup whose live dir is
-    gone, drop backups whose live dir exists (the stale-backup rule),
-    and clear old staging dirs — otherwise the stray partition
-    values would ride the migration read into ``v=1`` as phantom
-    cells."""
+def _heal_legacy_swaps(spark, fs, root) -> None:
+    """Round-9 upgrade healer: the old per-cell swap compactor
+    (`compact_parquet` per cell) could die between its two renames,
+    leaving ``cell=X`` MISSING with the data stranded at
+    ``cell=X__compact_old``. Before a legacy layout is read for
+    migration, heal each such backup (`sources.io._heal_dir`), drop
+    backups whose live dir exists (stale), and clear old staging
+    dirs — otherwise the stray partition values would ride the
+    migration read into ``v=1`` as phantom cells."""
     for st in fs.listStatus(root):
-        name = st.getPath().getName()
+        name, parked = st.getPath().getName(), st.getPath().toString()
         if name.endswith("__compact_tmp"):
             fs.delete(st.getPath(), True)
-        elif name.endswith("__compact_old"):
-            live = jvm.org.apache.hadoop.fs.Path(
-                root, name[:-len("__compact_old")])
-            if fs.exists(live):
-                fs.delete(st.getPath(), True)
-            elif not fs.rename(st.getPath(), live):
-                raise IOError(
-                    f"failed to restore stranded cell backup {name}")
+        elif name.endswith("__compact_old") and not _heal_dir(
+                spark, parked[:-len("__compact_old")], parked):
+            fs.delete(st.getPath(), True)
 
 
 def compact_index(spark: SparkSession, index_dir: str,
@@ -180,9 +172,7 @@ def _compact_index_unlocked(spark, index_dir, target_file_mb,
     from ..similarity.index import _has_legacy_cells
     from ..session import pin
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = fs_path(spark, f"{index_dir}/{_CELLS}")
     if not fs.exists(root) or not (
             index_versions(spark, index_dir)
             or _has_legacy_cells(spark, index_dir)):
@@ -193,14 +183,14 @@ def _compact_index_unlocked(spark, index_dir, target_file_mb,
     from ..sources.lease import commit_gate
 
     commit_gate(spark, index_dir, "compact_index stale-tmp sweep")
-    _clean_stale_tmps(fs, jvm, root)
+    _clean_stale_tmps(fs, root)
     if not index_versions(spark, index_dir):
-        _heal_legacy_swaps(jvm, fs, root)
+        _heal_legacy_swaps(spark, fs, root)
     live = _cells_path(spark, index_dir, None, "compact_index")
     tail = live.rsplit("/", 1)[1]
     v_new = (int(tail[2:]) + 1) if tail.startswith("v=") else 1
-    live_path = jvm.org.apache.hadoop.fs.Path(live)
-    files_before, total_bytes = _list_parquet_stats(fs, live_path)
+    files_before, total_bytes = _list_parquet_stats(
+        fs, fs_path(spark, live)[1])
 
     df = spark.read.parquet(live)
     # Partition-value type inference parses the all-digit cell
@@ -232,33 +222,22 @@ def _compact_index_unlocked(spark, index_dir, target_file_mb,
         per_file = max(
             1, int(total_rows * target_file_mb * 1024 * 1024
                    / max(1, total_bytes)))
+        # stage + renew-or-abort at the COMMIT point: a compaction
+        # over a huge index can outlive the lease TTL mid-rewrite; if
+        # the lease was taken over, publishing v_new would race the
+        # new writer — the staged dir is discarded and the call fails
+        # loudly instead
         tmp = f"{index_dir}/{_CELLS}/__publish_tmp_v{v_new}"
-        try:
-            (df.repartition("cell")
-               .write.mode("overwrite").partitionBy("cell")
-               .option("maxRecordsPerFile", per_file)
-               .parquet(tmp))
-        except Exception:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            raise
-        # renew-or-abort at the COMMIT point: a compaction over a
-        # huge index can outlive the lease TTL mid-rewrite; if the
-        # lease was taken over, publishing v_new would race the new
-        # writer (exactly the dual-writer hazard the lease exists
-        # for) — discard the staged dir and fail loudly instead
-        # (review r11; the round-12 `commit_gate` is this pattern
-        # extracted for every leased writer).
-        from ..sources.lease import WriterLeaseConflict, commit_gate
-
-        try:
-            commit_gate(spark, index_dir, "compact_index publish")
-        except WriterLeaseConflict:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-            raise
-        final = jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_CELLS}/v={v_new}")
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), final):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
+        _stage_dir(spark, df.repartition("cell").write
+                   .partitionBy("cell")
+                   .option("maxRecordsPerFile", per_file), tmp,
+                   gate=(index_dir, "compact_index publish"))
+        # the versioned publish: ONE rename makes the staged dir
+        # visible as v=N+1 (no parked copy — v=N stays in place)
+        jtmp = fs_path(spark, tmp)[1]
+        final = fs_path(spark, f"{index_dir}/{_CELLS}/v={v_new}")[1]
+        if not fs.rename(jtmp, final):
+            fs.delete(jtmp, True)
             raise IOError(f"publish rename to {final} failed")
     finally:
         if pinned is not None:
@@ -298,9 +277,7 @@ def vacuum_index(spark: SparkSession, index_dir: str,
 def _vacuum_index_unlocked(spark, index_dir, keep):
     if keep < 1:
         raise ValueError("vacuum must keep at least the live version")
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_CELLS}")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root = fs_path(spark, f"{index_dir}/{_CELLS}")
     if not fs.exists(root):
         raise ValueError(f"no index cells at {index_dir}")
     # renew-or-abort before the first delete (verdict r11 #1): the
@@ -309,12 +286,12 @@ def _vacuum_index_unlocked(spark, index_dir, keep):
     from ..sources.lease import commit_gate
 
     commit_gate(spark, index_dir, "vacuum_index publish")
-    _clean_stale_tmps(fs, jvm, root)
+    _clean_stale_tmps(fs, root)
     versions = index_versions(spark, index_dir)
     drop = list(versions[:-keep]) if len(versions) > keep else []
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(
-            f"{index_dir}/{_CELLS}/v={v}"), True)
+        fs.delete(fs_path(spark, f"{index_dir}/{_CELLS}/v={v}")[1],
+                  True)
     if versions:
         # migrated legacy dirs (implicit version 0) are superseded by
         # ANY published version

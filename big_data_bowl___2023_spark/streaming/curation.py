@@ -55,6 +55,7 @@ from ..functions.quality_model import model_quality_filter
 from ..functions.redact import redact_documents
 from ..pipelines.curation import STAGE, STAGES, boundary, drop_lineage
 from ..session import pin
+from ..sources.io import _heal_dir, _stage_dir, _swap_dir, fs_path
 from .dedup_stream import (
     incremental_dedup,
     incremental_dedup_watermarked,
@@ -80,9 +81,7 @@ def _read_parquet_if_present(spark, path: str) -> DataFrame | None:
     read would use — object-store-safe, no local-path assumption."""
     from pyspark.errors import AnalysisException
 
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = fs_path(spark, path.rstrip("/"))
     if not fs.exists(p):
         return None
     try:
@@ -343,16 +342,9 @@ def make_curation_ingest_batch_fn(out_dir: str, index_dir: str,
 
     def _process_locked(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # heal a compaction that died between its two renames BEFORE
-        # any append: with the corpus parked at _compact_old and
-        # out_dir absent, a blind append would recreate a fresh
-        # out_dir holding only this batch — and the NEXT compaction,
-        # seeing out_dir exist, would conclude its backup is
-        # post-swap residue and delete the only copy of the
-        # pre-crash corpus (review r11 finding — the same
-        # append-after-unhealed-crash bug heal_state_dir fixes for
-        # __bak-managed dirs, on the other swap scheme)
-        _heal_compact_swap(spark, out_dir)
+        # heal a killed compaction swap BEFORE any append (step 4
+        # of `sources.io._swap_dir`)
+        _heal_corpus(spark, out_dir)
         # dir-absent → bootstrap; any OTHER read failure raises (a
         # transient error treated as 'no history' would silently
         # admit every duplicate in this batch)
@@ -741,28 +733,21 @@ def _tombstone_dir(out_dir: str) -> str:
     return out_dir.rstrip("/") + "_tombstones"
 
 
-def _heal_compact_swap(spark, out_dir: str) -> bool:
-    """Heal a `compact_curated` that died between its two renames:
-    live corpus gone, data parked at ``_compact_old`` — rename it
-    back. Every WRITER that touches ``out_dir`` must call this
-    before writing (the ingest loop, snapshot applies via the loop,
-    and compaction itself): an append into the absent live dir would
-    shadow the parked corpus, and the next compaction would then
-    mistake the backup for post-swap residue and delete it. Returns
-    True when a heal happened."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(out_dir.rstrip("/"))
-    bak = jvm.org.apache.hadoop.fs.Path(
-        out_dir.rstrip("/") + "_compact_old")
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root) and fs.exists(bak):
-        if not fs.rename(bak, root):
-            raise IOError(f"failed to restore crashed compaction "
-                          f"backup {bak}")
-        spark.catalog.refreshByPath(out_dir)
-        return True
-    return False
+def _corpus_swap_dirs(out_dir: str) -> tuple[str, str, str]:
+    """(live, staged, parked) of a corpus dir the loops append to —
+    the names `compact_curated` and `compact_semantic_corpus` hand
+    the crash-safe directory replace (`sources.io._swap_dir`)."""
+    live = out_dir.rstrip("/")
+    return live, live + "_compacting", live + "_compact_old"
+
+
+def _heal_corpus(spark, out_dir: str) -> bool:
+    """The heal step (`sources.io._heal_dir`) for a corpus dir. Every
+    WRITER that touches ``out_dir`` calls it before reading or
+    appending (the ingest loops, snapshot applies via the loop, and
+    the compactions)."""
+    live, _, parked = _corpus_swap_dirs(out_dir)
+    return _heal_dir(spark, live, parked)
 
 
 def read_curated(spark, out_dir: str) -> DataFrame:
@@ -793,15 +778,13 @@ def compact_curated(spark, out_dir: str) -> dict:
     """Apply the tombstones PHYSICALLY: rewrite the corpus dir to the
     `read_curated` view and clear the tombstone index — the
     bronze-layer maintenance pass that keeps the map-side anti-join's
-    broadcast small. Crash-safe at every boundary: the surviving rows
-    COMMIT to a temp dir first, the live dir is swapped in by two
-    renames with rollback (an in-place overwrite would delete the
-    corpus before the new files commit — review r10 finding; a crash
-    there loses the dataset), and the tombstone dir is cleared LAST
-    (a crash before the clear leaves tombstones referencing rows
-    already gone — the anti-join is then a no-op, never wrong).
-    Stop-the-world per directory like every swap compactor here —
-    schedule when no reader is mid-scan. Returns {"rows_before",
+    broadcast small. The corpus goes live through the crash-safe
+    directory replace (`sources.io._swap_dir`, gated by the writer
+    lease), and the tombstone dir is cleared LAST (a crash before the
+    clear leaves tombstones referencing rows already gone — the
+    anti-join is then a no-op, never wrong). Stop-the-world per
+    directory like every swap compactor here — schedule when no
+    reader is mid-scan. Returns {"rows_before",
     "rows_after", "tombstones_cleared"}. Serialized by the writer
     lease (`sources.lease`)."""
     from ..sources.lease import writer_lease
@@ -813,18 +796,10 @@ def compact_curated(spark, out_dir: str) -> dict:
 def _compact_curated_unlocked(spark, out_dir):
     from ..sources.io import drop_state_dir, read_state_dir
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _jp(p):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    root = _jp(out_dir.rstrip("/"))
-    fs = root.getFileSystem(conf)
-    # heal a prior hard kill between the two renames BEFORE the read,
-    # or the rerun could never reach any recovery code (review r10;
-    # shared helper since r11 — the ingest loop must heal too)
-    _heal_compact_swap(spark, out_dir)
+    live, staged, parked = _corpus_swap_dirs(out_dir)
+    # heal before the read, or a rerun after a kill mid-swap could
+    # never reach any recovery code
+    _heal_corpus(spark, out_dir)
     tomb_dir = _tombstone_dir(out_dir)
     tombs = read_state_dir(spark, tomb_dir)
     before = spark.read.parquet(out_dir).count()
@@ -832,44 +807,14 @@ def _compact_curated_unlocked(spark, out_dir):
         return {"rows_before": before, "rows_after": before,
                 "tombstones_cleared": 0}
     n_tombs = tombs.count()
-    view = read_curated(spark, out_dir)
-    tmp = _jp(out_dir.rstrip("/") + "_compacting")
-    backup = _jp(out_dir.rstrip("/") + "_compact_old")
-    fs.delete(tmp, True)
-    # a leftover backup means a prior crash AFTER its swap committed
-    # (the dataset read above succeeded, so live data is at out_dir)
-    fs.delete(backup, True)
-    try:
-        view.write.mode("overwrite").parquet(tmp.toString())
-    except Exception:
-        fs.delete(tmp, True)
-        raise
-    after = spark.read.parquet(tmp.toString()).count()
-    # renew-or-abort at the swap (verdict r11 #1): the rewrite above
-    # can outlive the TTL; a dethroned compactor must discard its
-    # staged dir, never rename the new holder's live corpus away
-    from ..sources.lease import WriterLeaseConflict, commit_gate
-
-    try:
-        commit_gate(spark, out_dir, "compact_curated publish")
-    except WriterLeaseConflict:
-        fs.delete(tmp, True)
-        raise
-    swapped_out = False
-    try:
-        if not fs.rename(root, backup):
-            raise IOError(f"rename {root} -> {backup} failed")
-        swapped_out = True
-        if not fs.rename(tmp, root):
-            raise IOError(f"rename {tmp} -> {root} failed")
-    except Exception:
-        if swapped_out and not fs.exists(root):
-            fs.rename(backup, root)
-        fs.delete(tmp, True)
-        raise
-    fs.delete(backup, True)
+    # renew-or-abort at the swap: the rewrite can outlive the TTL,
+    # and a dethroned compactor must never rename the new holder's
+    # live corpus away
+    _stage_dir(spark, read_curated(spark, out_dir).write, staged,
+               gate=(out_dir, "compact_curated publish"))
+    after = spark.read.parquet(staged).count()
+    _swap_dir(spark, live, staged, parked)
     drop_state_dir(spark, tomb_dir)
-    spark.catalog.refreshByPath(out_dir)
     return {"rows_before": before, "rows_after": after,
             "tombstones_cleared": n_tombs}
 

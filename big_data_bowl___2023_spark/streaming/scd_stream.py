@@ -65,13 +65,7 @@ from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_apply_with_quarantine, scd2_init
 from ..session import pin
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath, jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration())
+from ..sources.io import fs_path
 
 
 def _committed_batch_ids(spark: SparkSession, root: str) -> list[int]:
@@ -79,7 +73,7 @@ def _committed_batch_ids(spark: SparkSession, root: str) -> list[int]:
     ``root``. Torn dirs (crash mid-write) are invisible; so are stray
     non-numeric ``batch=...`` dirs (tooling leftovers must not take
     down every reader — same guard as `sources.io.snapshot_versions`)."""
-    jvm, jpath, fs = _fs(spark, root)
+    fs, jpath = fs_path(spark, root)
     if not fs.exists(jpath):
         return []
     ids = []
@@ -90,18 +84,16 @@ def _committed_batch_ids(spark: SparkSession, root: str) -> list[int]:
                 bid = int(name.split("=", 1)[1])
             except ValueError:
                 continue
-            ok = jvm.org.apache.hadoop.fs.Path(st.getPath(),
-                                               "_SUCCESS")
-            if fs.exists(ok):
+            if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(
+                    st.getPath(), "_SUCCESS")):
                 ids.append(bid)
     return sorted(ids)
 
 
 def _is_committed(spark: SparkSession, root: str,
                   batch_id: int) -> bool:
-    jvm, _, fs = _fs(spark, root)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(
-        f"{root}/batch={batch_id}/_SUCCESS"))
+    fs, jp = fs_path(spark, f"{root}/batch={batch_id}/_SUCCESS")
+    return fs.exists(jp)
 
 
 def committed_snapshot_ids(spark: SparkSession,

@@ -57,7 +57,18 @@ from ..dedup.semantic import (
     scaled_k,
 )
 from ..session import pin
-from .curation import _read_parquet_if_present
+from ..sources.io import (
+    _stage_dir,
+    _swap_dir,
+    heal_state_dir,
+    read_state_dir,
+    replace_state_dir,
+)
+from .curation import (
+    _corpus_swap_dirs,
+    _heal_corpus,
+    _read_parquet_if_present,
+)
 
 __all__ = ["compact_semantic_corpus", "make_semantic_ingest_batch_fn",
            "pairs_with_centroids"]
@@ -82,11 +93,16 @@ def compact_semantic_corpus(spark, out_dir: str, codebook_path: str,
     ingest-time drops, which must survive — see the in-code note).
 
     Run it with the stream STOPPED (or against a snapshot copy): it
-    rewrites the same dirs the loop appends to. Write order mirrors
-    the loop's crash story — compacted corpus to a temp dir first,
-    then codebook, dropped index, and the corpus swap last, so an
-    interrupted compaction leaves the old corpus readable (the temp
-    dir is simply re-created next attempt).
+    rewrites the same dirs the loop appends to. Write order: the
+    compacted corpus is staged (``_compacting``) and the writer lease
+    gated, then the codebook is saved, the dropped index replaced
+    (`sources.io.replace_state_dir`), and the corpus swapped in last
+    (parked at ``_compact_old``) — both through the crash-safe
+    directory replace (`sources.io._swap_dir`), whose heal the loop
+    and the next compaction run first. A crash before the swap
+    leaves the old corpus live, beside a codebook and dropped index
+    that already describe the compacted one: the next compaction
+    re-derives all three from it.
 
     Returns ``{"before": n, "after": n, "dropped": n}`` — the audit
     record. Kernel kwargs are the corpus-scale settings, exactly as
@@ -109,6 +125,8 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
                                prefilter_broadcast):
     from ..similarity.pq import save_codebooks, train_pq
 
+    live, staged, parked = _corpus_swap_dirs(out_dir)
+    _heal_corpus(spark, out_dir)
     corpus = _read_parquet_if_present(spark, out_dir)
     if corpus is None:
         return {"before": 0, "after": 0, "dropped": 0}
@@ -134,25 +152,11 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
         kept = pin(keep_min_per_component(corpus, pairs, id_col))
         n_kept = kept.count()
 
-        tmp = out_dir.rstrip("/") + "_compacting"
-        kept.write.mode("overwrite").parquet(tmp)
-        # renew-or-abort before the first LIVE mutation (verdict r11
-        # #1): everything up to here staged to the temp dir; from the
-        # codebook refresh on, a dethroned compactor would overwrite
-        # the new writer's artifacts. On abort the staged dir is
-        # discarded — leaving it would park a corpus-sized duplicate
-        # AND the next (legitimate) pass would overwrite it anyway.
-        from ..sources.lease import WriterLeaseConflict, commit_gate
-
-        try:
-            commit_gate(spark, out_dir,
-                        "compact_semantic_corpus publish")
-        except WriterLeaseConflict:
-            jvm = spark._jvm
-            jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-            jtmp.getFileSystem(spark._jsc.hadoopConfiguration()) \
-                .delete(jtmp, True)
-            raise
+        # staged before the first LIVE mutation, and the lease gated
+        # (renew-or-abort): from the codebook refresh on, a dethroned
+        # compactor would overwrite the new writer's artifacts
+        _stage_dir(spark, kept.write, staged,
+                   gate=(out_dir, "compact_semantic_corpus publish"))
         save_codebooks(spark, [cents], codebook_path)
         # the new dropped index is a UNION of the old one with the
         # compaction's drops — ids dropped during INGEST were never
@@ -160,38 +164,19 @@ def _compact_semantic_unlocked(spark, out_dir, codebook_path,
         # and a later redelivery of their batch would re-adjudicate
         # them against a corpus missing their witnesses (the exact
         # hole the index closes). An ingest-dropped id can never
-        # legitimately rejoin, so the union is strictly safe. The
-        # old index must be MATERIALIZED before the overwrite of its
-        # own directory — with truncate=True (the read-modify-write
-        # convention of streaming/curation.py and the io.py merge):
-        # in durable-pins mode a plain pin() is a lazy
-        # persist(DISK_ONLY) with lineage intact, so the overwrite
-        # would either refuse ("cannot overwrite a path that is also
-        # being read from") or recompute from files being deleted.
+        # legitimately rejoin, so the union is strictly safe.
         dropped_dir = out_dir.rstrip("/") + "_dropped"
         new_drops = corpus.join(kept.select(id_col), id_col,
                                 "left_anti").select(id_col)
-        old_idx = _read_parquet_if_present(spark, dropped_dir)
+        old_idx = read_state_dir(spark, dropped_dir)
         if old_idx is not None:
-            new_drops = pin(
-                new_drops.unionByName(old_idx.select(id_col))
-                .distinct(), truncate=True)
-        new_drops.write.mode("overwrite").parquet(dropped_dir)
-        # the swap: rewrite the corpus dir from the committed temp
-        # copy (two renames would be atomic-er on HDFS; overwrite
-        # from the durable temp keeps the recovery story simple and
-        # object-store-safe — a crash here re-runs compaction over
-        # whichever corpus state exists, always valid input). NOTE
-        # successive passes are monotone, not a one-step fixpoint:
-        # each retrain can expose pairs the previous boundaries hid
-        # and drop a few more
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(out_dir)
-        # the swap has committed: drop the temp copy so a corpus-
-        # sized duplicate doesn't sit on disk until the next pass
-        jvm = spark._jvm
-        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        jtmp.getFileSystem(spark._jsc.hadoopConfiguration()) \
-            .delete(jtmp, True)
+            new_drops = new_drops.unionByName(
+                old_idx.select(id_col)).distinct()
+        replace_state_dir(new_drops, dropped_dir)
+        # the corpus swap, last. Successive passes are monotone, not
+        # a one-step fixpoint: each retrain can expose pairs the
+        # previous boundaries hid and drop a few more
+        _swap_dir(spark, live, staged, parked)
     finally:
         for bc in bcs:
             bc.unpersist(blocking=False)
@@ -274,6 +259,11 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
 
     def _process_locked(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # heal killed compaction swaps BEFORE any read or append
+        # (step 4 of `sources.io._swap_dir`): an unhealed corpus
+        # would re-bootstrap a fresh codebook over this batch alone
+        _heal_corpus(spark, out_dir)
+        heal_state_dir(spark, dropped_dir)
         corpus = _read_parquet_if_present(spark, out_dir)
         bcs: list = []
         try:
@@ -312,7 +302,7 @@ def make_semantic_ingest_batch_fn(out_dir: str, codebook_path: str,
             # precondition)
             fresh = batch_df.join(corpus.select(id_col), id_col,
                                   "left_anti")
-            dropped_idx = _read_parquet_if_present(spark, dropped_dir)
+            dropped_idx = read_state_dir(spark, dropped_dir)
             if dropped_idx is not None:
                 fresh = fresh.join(dropped_idx.select(id_col),
                                    id_col, "left_anti")

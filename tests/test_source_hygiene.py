@@ -42,3 +42,46 @@ def test_every_top_level_definition_is_referenced():
     assert unreferenced == [], (
         "top-level definitions nothing references — delete them: "
         + ", ".join(unreferenced))
+
+
+def _attribute_calls(path):
+    """(enclosing top-level def, attribute name, line) of every
+    ``x.attr(...)`` call in a file; ``os.*`` calls are not Hadoop
+    FileSystem calls and are skipped."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    for top in tree.body:
+        for node in ast.walk(top):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and not (isinstance(node.func.value, ast.Name)
+                             and node.func.value.id == "os")):
+                yield getattr(top, "name", None), node.func.attr, \
+                    node.lineno
+
+
+def test_filesystem_lookup_and_renames_only_in_io():
+    """The Hadoop FileSystem lookup (`sources.io.fs_path`) and every
+    directory rename (the crash-safe replace's heal and swap) live in
+    sources/io.py, so no writer grows its own swap or heal again. The
+    one exception is compact_index's versioned publish: one rename to
+    ``v=N+1``, with no parked copy."""
+    allowed = {("streaming/ann_index_stream.py",
+                "_compact_index_unlocked", "rename")}
+    offenders, io_sites = [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for fn, attr, line in _attribute_calls(path):
+            if attr not in ("getFileSystem", "rename"):
+                continue
+            if rel == "sources/io.py":
+                io_sites.append((fn, attr))
+            elif (rel, fn, attr) not in allowed:
+                offenders.append(f"{rel}:{line} .{attr}(")
+    assert offenders == [], (
+        "Hadoop FileSystem lookups/renames outside sources/io.py — "
+        "use fs_path and the crash-safe directory replace: "
+        + ", ".join(offenders))
+    assert [fn for fn, attr in io_sites if attr == "getFileSystem"] \
+        == ["fs_path"]
+    assert {fn for fn, attr in io_sites if attr == "rename"} \
+        == {"_heal_dir", "_swap_dir"}
